@@ -66,13 +66,16 @@ _confs_ensured: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 def ensure_runtime_confs(spark: SparkSession) -> None:
     if spark in _confs_ensured:
         return
+    ok = True
     for k, v in RUNTIME_CONFS.items():
         try:
             if spark.conf.get(k, None) != v:
                 spark.conf.set(k, v)
         except Exception:
-            pass
-    _confs_ensured.add(spark)
+            ok = False
+    # memoize only a clean pass: a failed set is retried on the next load
+    if ok:
+        _confs_ensured.add(spark)
 
 
 def normalize_event_ts(df: DataFrame, col: str = "ts", dtype: str | None = None) -> DataFrame:

@@ -1,15 +1,20 @@
-"""Text-analysis operators for training-data pipelines.
+"""Text-analysis expressions for training-data pipelines: language-ID by
+stopword hits, quality scoring, token counting, deterministic document
+fingerprinting.
 
-All pure Column expressions (JVM-side, codegen-friendly): language-ID by
-stopword n-gram hits, quality scoring, token counting, deterministic document
-fingerprinting. Designed so a 100 TB corpus costs one scan per metric set —
-no Python in the hot path.
+Each expression has one definition, a ``*_sql`` builder that returns a
+Spark SQL string over SQL sub-expressions; callers use it through
+selectExpr or F.expr. A whole expression stack is then one parse (one py4j
+round trip) at plan build instead of one call per Column node, and it runs
+JVM-side: one scan per metric set, no Python in the hot path.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..sqlquote import sql_ident, sql_str
 
 # Tiny per-language stopword lists for the n-gram/stopword language heuristic.
 STOPWORDS = {
@@ -18,54 +23,51 @@ STOPWORDS = {
     "es": ["el", "la", "de", "que", "y", "en", "un", "es", "por", "con"],
     "fr": ["le", "la", "de", "et", "un", "est", "pour", "que", "dans", "sur"],
 }
+LANGS = ("en", "de", "es", "fr")
 
 WORD_SPLIT_RE = r"\s+"
 # BPE-ish tokenizer regex: letter runs, digit runs, single punctuation marks.
 BPE_TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
-def normalized_text(col: Column | str) -> Column:
-    """lower + trim + collapse whitespace — canonical text form."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(F.lower(F.trim(c)), WORD_SPLIT_RE, " ")
+def norm_sql(text: str) -> str:
+    """lower + trim + collapse whitespace of the string expression `text` —
+    the canonical text form."""
+    return f"regexp_replace(lower(trim({text})), {sql_str(WORD_SPLIT_RE)}, ' ')"
 
 
-def tokens(col: Column | str) -> Column:
+def tokens_sql(text: str) -> str:
     """Whitespace tokens of the normalized text (array<string>)."""
-    return F.split(normalized_text(col), " ")
+    return f"split({norm_sql(text)}, ' ')"
 
 
-# --- SQL-string twins (r13, plan-build cost) -------------------------------
-# The Column-API forms of the staged language/curation stacks cost 1.5-2k
-# py4j round trips per query build (one per Column node, several per HOF
-# lambda); the same expressions as ONE selectExpr string are a single round
-# trip and parse to the IDENTICAL analyzed tree (oracle value-hash parity
-# over the registry is the proof). Each *_sql helper is a term-for-term twin
-# of the Column helper directly above/below it — change them in pairs.
+def token_count_sql(toks: str) -> str:
+    """BIGINT length of the array expression `toks`."""
+    return f"CAST(size({toks}) AS BIGINT)"
 
 
-def norm_sql(col: str) -> str:
-    """SQL twin of normalized_text ('\\\\s+' in a SQL literal == r'\\s+')."""
-    return f"regexp_replace(lower(trim(`{col}`)), '\\\\s+', ' ')"
+def fingerprint_sql(text: str) -> str:
+    """Deterministic document fingerprint: md5 of the canonical text form.
+    Grouping on this (not raw text) keeps shuffle keys small at 100 TB."""
+    return f"md5({norm_sql(text)})"
 
 
-def tokens_sql(col: str) -> str:
-    """SQL twin of tokens()."""
-    return f"split({norm_sql(col)}, ' ')"
+def stopword_hits_sql(toks: str, lang: str) -> str:
+    """Number of tokens of the array expression `toks` that are stopwords
+    of `lang` (array filter, JVM-side)."""
+    words = ", ".join(sql_str(w) for w in STOPWORDS[lang])
+    return f"CAST(size(filter({toks}, t -> t IN ({words}))) AS BIGINT)"
 
 
-def stopword_hits_sql(toks_expr: str, lang: str) -> str:
-    """SQL twin of the staged hit column: size(filter(toks, t -> t IN (...)))
-    over an ALREADY-TOKENIZED array expression."""
-    words = ", ".join(f"'{w}'" for w in STOPWORDS[lang])
-    return f"CAST(size(filter({toks_expr}, t -> t IN ({words}))) AS BIGINT)"
-
-
-def language_argmax_sql(hits: dict[str, str], langs: tuple[str, ...]) -> str:
-    """SQL twin of language_argmax over hit EXPRESSION STRINGS: the same
-    iteratively-nested CASE (later langs outermost) with the same strict/
-    non-strict comparison pattern and left-associated AND chain."""
-    expr = "'unknown'"
+def language_argmax_sql(hits: dict[str, str], langs: tuple[str, ...] = LANGS) -> str:
+    """argmax of per-language hit-count expressions with deterministic
+    precedence order; 'unknown' when no list scores a hit. Precedence =
+    declaration order on ties: a lang wins only with a STRICTLY greater
+    score than every earlier lang and >= every later one. Pass CHEAP column
+    references when the hit counts are staged as real columns — the chain
+    references each hit ~7x, which duplicates the full expression tree when
+    fed raw exprs."""
+    expr = sql_str("unknown")
     for i, lang in enumerate(langs):
         cond = f"{hits[lang]} > 0"
         for j, other in enumerate(langs):
@@ -73,12 +75,30 @@ def language_argmax_sql(hits: dict[str, str], langs: tuple[str, ...]) -> str:
                 continue
             op = ">" if j < i else ">="
             cond = f"{cond} AND {hits[lang]} {op} {hits[other]}"
-        expr = f"CASE WHEN {cond} THEN '{lang}' ELSE {expr} END"
+        expr = f"CASE WHEN {cond} THEN {sql_str(lang)} ELSE {expr} END"
     return expr
 
 
-def whitespace_token_count(col: Column | str) -> Column:
-    return F.size(tokens(col)).cast("bigint")
+def with_language(
+    df: DataFrame,
+    text_col: str = "text",
+    keep_cols: tuple[str, ...] = (),
+    out: str = "detected_lang",
+    langs: tuple[str, ...] = LANGS,
+) -> DataFrame:
+    """keep_cols + detected language. Tokenization and the per-language hit
+    counts are staged as real columns, so the split/regexp runs ONCE per row
+    (the argmax over inline hit expressions re-tokenizes per hit reference —
+    ~28 evaluations for 4 languages). CollapseProject keeps the staging
+    projection because the token array is non-cheap and referenced by every
+    hit column."""
+    keep = [sql_ident(c) for c in keep_cols]
+    base = df.selectExpr(*keep, f"{tokens_sql(sql_ident(text_col))} AS __toks")
+    staged = base.selectExpr(
+        *keep, *[f"{stopword_hits_sql('__toks', l)} AS __hits_{l}" for l in langs]
+    )
+    lang_sql = language_argmax_sql({l: f"__hits_{l}" for l in langs}, langs)
+    return staged.selectExpr(*keep, f"{lang_sql} AS {sql_ident(out)}")
 
 
 def bpe_ish_token_count(col: Column | str) -> Column:
@@ -88,109 +108,31 @@ def bpe_ish_token_count(col: Column | str) -> Column:
     return F.regexp_count(c, F.lit(BPE_TOKEN_RE)).cast("bigint")
 
 
-def stopword_hits(col: Column | str, lang: str) -> Column:
-    """Number of tokens that are stopwords of `lang` (array filter, JVM-side)."""
-    words = STOPWORDS[lang]
-    return F.size(F.filter(tokens(col), lambda t: t.isin(*words))).cast("bigint")
-
-
-def language_argmax(hits: dict[str, Column], langs: tuple[str, ...] | None = None) -> Column:
-    """argmax of per-language hit counts with deterministic precedence order;
-    'unknown' when no list scores a hit. Precedence = declaration order on
-    ties: a lang wins only with a STRICTLY greater score than every earlier
-    lang and >= every later one. Pass CHEAP column references when the hit
-    counts are staged as real columns — the chain references each hit ~7x,
-    which duplicates the full expression tree when fed raw exprs."""
-    langs = langs or tuple(hits)
-    expr = F.lit("unknown")
-    for i, lang in enumerate(langs):
-        cond = hits[lang] > 0
-        for j, other in enumerate(langs):
-            if other == lang:
-                continue
-            cond = cond & (
-                (hits[lang] > hits[other]) if j < i else (hits[lang] >= hits[other])
-            )
-        expr = F.when(cond, F.lit(lang)).otherwise(expr)
-    return expr
-
-
-def detect_language(col: Column | str, langs: tuple[str, ...] = ("en", "de", "es", "fr")) -> Column:
-    """argmax of stopword hits (single-Column form — re-tokenizes per hit
-    reference; prefer `with_language` / staged hit columns in scan-heavy
-    pipelines)."""
-    return language_argmax({lang: stopword_hits(col, lang) for lang in langs}, langs)
-
-
-def staged_language_hits(
-    df: DataFrame,
-    text_col: str = "text",
-    keep_cols: tuple[str, ...] = (),
-    langs: tuple[str, ...] = ("en", "de", "es", "fr"),
-) -> DataFrame:
-    """keep_cols + one `__hits_<lang>` bigint column per language, with
-    tokenization staged as a real column so the split/regexp runs ONCE per
-    row (the naive detect_language expression re-tokenizes per hit
-    reference — ~28 evaluations for 4 languages). CollapseProject keeps the
-    staging projection because the token array is non-cheap and referenced
-    by every hit column."""
-    keep = [f"`{c}`" for c in keep_cols]
-    # SQL-string twins of the previous Column forms (module note above)
-    base = df.selectExpr(*keep, f"{tokens_sql(text_col)} AS __toks")
-    hit_cols = [
-        f"{stopword_hits_sql('__toks', lang)} AS __hits_{lang}" for lang in langs
-    ]
-    return base.selectExpr(*keep, *hit_cols)
-
-
-def with_language(
-    df: DataFrame,
-    text_col: str = "text",
-    keep_cols: tuple[str, ...] = (),
-    out: str = "detected_lang",
-    langs: tuple[str, ...] = ("en", "de", "es", "fr"),
-) -> DataFrame:
-    """keep_cols + detected language, via staged hit columns (one
-    tokenization pass per row; identical results to detect_language)."""
-    staged = staged_language_hits(df, text_col, keep_cols, langs)
-    lang_sql = language_argmax_sql({l: f"__hits_{l}" for l in langs}, langs)
-    return staged.selectExpr(*[f"`{c}`" for c in keep_cols], f"{lang_sql} AS `{out}`")
-
-
 def punct_count(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.regexp_count(c, F.lit(r"[^A-Za-z0-9\s]")).cast("bigint")
 
 
-def quality_score(col: Column | str) -> Column:
+def quality_inputs_sql(text: str, toks: str) -> tuple[str, str, str, str]:
+    """The four `quality_score_sql` inputs of the string expression `text`
+    whose token array expression is `toks`: BIGINT token count and 'en'
+    stopword hits, DOUBLE letter and character counts."""
+    return (
+        token_count_sql(toks),
+        stopword_hits_sql(toks, "en"),
+        f"CAST(regexp_count({text}, {sql_str('[A-Za-z]')}) AS DOUBLE)",
+        f"CAST(length({text}) AS DOUBLE)",
+    )
+
+
+def quality_score_sql(n_tok: str, hits_en: str, n_alpha: str, n_chars: str) -> str:
     """Composite [0,1] quality score: stopword ratio + alpha ratio + length
-    saturation, the reference-free analog of heuristic quality filters."""
-    c = F.col(col) if isinstance(col, str) else col
-    n_tok = whitespace_token_count(c).cast("double")
-    stop_ratio = stopword_hits(c, "en").cast("double") / F.greatest(n_tok, F.lit(1.0))
-    n_chars = F.length(c).cast("double")
-    alpha_chars = F.regexp_count(c, F.lit(r"[A-Za-z]")).cast("double")
-    alpha_ratio = alpha_chars / F.greatest(n_chars, F.lit(1.0))
-    len_sat = F.least(n_tok / F.lit(100.0), F.lit(1.0))
-    return F.round(
-        F.lit(0.4) * stop_ratio + F.lit(0.3) * alpha_ratio + F.lit(0.3) * len_sat, 6
-    )
-
-
-def fingerprint(col: Column | str) -> Column:
-    """Deterministic document fingerprint: md5 of the canonical text form.
-    Grouping on this (not raw text) keeps shuffle keys small at 100 TB."""
-    return F.md5(normalized_text(col))
-
-
-def text_profile(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """One-pass per-document text profile."""
-    return df.select(
-        id_col,
-        whitespace_token_count(text_col).alias("n_tokens"),
-        bpe_ish_token_count(text_col).alias("n_bpe_tokens"),
-        punct_count(text_col).alias("n_punct"),
-        detect_language(text_col).alias("detected_lang"),
-        quality_score(text_col).alias("quality"),
-        fingerprint(text_col).alias("fingerprint"),
-    )
+    saturation, the reference-free analog of heuristic quality filters.
+    Inputs are the `quality_inputs_sql` expressions — fed straight from raw
+    text, or as references to columns staged from them. The `D` suffix keeps
+    every float literal a DOUBLE."""
+    n = f"CAST({n_tok} AS DOUBLE)"
+    stop_ratio = f"CAST({hits_en} AS DOUBLE) / greatest({n}, 1.0D)"
+    alpha_ratio = f"{n_alpha} / greatest({n_chars}, 1.0D)"
+    len_sat = f"least({n} / 100.0D, 1.0D)"
+    return f"round(0.4D * ({stop_ratio}) + 0.3D * ({alpha_ratio}) + 0.3D * ({len_sat}), 6)"

@@ -2,7 +2,7 @@
 reference's dbt model chain (entry point B, SURVEY.md §3.2):
 include/dbt/models/taico/meta/fb_meta_ads_transformed.sql.
 
-Stages (all Column expressions, one declarative plan):
+Stages (SQL expressions, one declarative plan):
   cast/clean (comma-decimal money, numeric-as-string counts)
   -> computed-key LEFT join to campaigns (J2: concat('campaign_id_', substring(id, 4)))
   -> CASE mappings (media_type from objective, media_cluster from
@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..sqlquote import sql_str
+from .transforms import comma_decimal_sql
 
 OBJECTIVE_TO_MEDIA_TYPE = {
     "CONVERSIONS": "Conversion Ad",
@@ -39,9 +41,8 @@ def ads_insights_from_fixtures(spark: SparkSession, sf_dir: str) -> DataFrame:
     (range-boundary sample, checkpoint+count, assignment) and each pays the
     extra exchange stage, which outweighs the parallel-synthesis gain."""
     e = load_table(spark, sf_dir, "events")
-    # SQL-string twins of the previous Column stack (r13: one selectExpr
-    # round trip instead of ~100 py4j calls per build — see llm.dedup's
-    # module note; identical analyzed tree, oracle value-hash parity).
+    # one selectExpr round trip instead of ~100 py4j calls per build (see
+    # llm.dedup's module note on plan-build cost)
     return e.selectExpr(
         "concat('ad_', CAST(event_id AS STRING)) AS ad_id",
         "concat('campaign_id_', CAST(user_id % 50 AS STRING)) AS campaign_id",
@@ -83,11 +84,9 @@ def campaigns_from_fixtures(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fb_ads_transform(ads: DataFrame, campaigns: DataFrame) -> DataFrame:
     """fb_meta_ads_transformed.sql restated. Returns the transformed media
     fact slice with a deterministic row_number id ordered by ad_id."""
-    # SQL-string twins (r13, plan-build cost — see the note in
-    # ads_insights_from_fixtures): comma_decimal('x') ==
-    # CAST(replace(x, ',', '.') AS DOUBLE) term for term; the CASE chains
-    # are generated from the same OBJECTIVE_TO_MEDIA_TYPE / KNOWN_CLUSTERS
-    # constants the Column forms used.
+    # SQL strings (plan-build cost — see the note in
+    # ads_insights_from_fixtures); the CASE chains are generated from the
+    # OBJECTIVE_TO_MEDIA_TYPE / KNOWN_CLUSTERS constants.
     camp = campaigns.selectExpr(
         "concat('campaign_id_', substring(id, 4)) AS campaign_id",
         "name AS campaign_name",
@@ -100,8 +99,8 @@ def fb_ads_transform(ads: DataFrame, campaigns: DataFrame) -> DataFrame:
         "CAST(clicks AS INT) AS clicks",
         "CAST(impressions AS INT) AS impressions",
         "CAST(unique_clicks AS INT) AS `unique`",
-        "CAST(replace(spend, ',', '.') AS DOUBLE) AS spend",
-        "CAST(replace(conversion_values, ',', '.') AS DOUBLE) AS revenue",
+        f"{comma_decimal_sql('spend')} AS spend",
+        f"{comma_decimal_sql('conversion_values')} AS revenue",
         "to_timestamp(created_time) AS added_at",
         "account_name AS publisher",
         "account_id AS property",
@@ -110,11 +109,12 @@ def fb_ads_transform(ads: DataFrame, campaigns: DataFrame) -> DataFrame:
     media_type_sql = (
         "CASE "
         + " ".join(
-            f"WHEN objective = '{k}' THEN '{v}'" for k, v in OBJECTIVE_TO_MEDIA_TYPE.items()
+            f"WHEN objective = {sql_str(k)} THEN {sql_str(v)}"
+            for k, v in OBJECTIVE_TO_MEDIA_TYPE.items()
         )
         + " ELSE 'Other Ad' END"
     )
-    cluster_list = ", ".join(f"'{c}'" for c in KNOWN_CLUSTERS)
+    cluster_list = ", ".join(sql_str(c) for c in KNOWN_CLUSTERS)
     media_cluster_sql = (
         f"CASE WHEN optimization_goal IN ({cluster_list}) THEN optimization_goal"
         " ELSE 'Other' END"

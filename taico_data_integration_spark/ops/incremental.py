@@ -701,9 +701,9 @@ class TableStore(TableFormat):
         for vphys in sorted(groups):
             vdir = self._physical_dir(table, vphys)
             sel = sorted(groups[vphys])
-            # whole-generation fast path (round 12, measured in
-            # tools/manifest_probe.py): when the selection references
-            # EVERY file the physical holder wrote — the single-generation
+            # whole-generation fast path (round 12, measured in SCALE.md
+            # "Manifest metadata at high file counts"): when the selection
+            # references EVERY file the physical holder wrote — the single-generation
             # table, a fresh compact, a full COW reference — pass the
             # DIRECTORY instead of N explicit paths. Spark's explicit-path
             # plan build is ~1.8 ms/path of sequential driver-side work

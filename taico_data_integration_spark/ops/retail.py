@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from .transforms import dual_format_timestamp, surrogate_key, surrogate_key_sql
+from .transforms import dual_format_timestamp, surrogate_key_sql
 
 
 def raw_invoices_from_fixtures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -34,9 +34,8 @@ def raw_invoices_from_fixtures(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
     p = load_table(spark, sf_dir, "part")
-    # SQL-string twins of the previous Column stack (r13 plan-build cost —
-    # see llm.text module note): identical date-string synthesis and
-    # decimal math, one selectExpr round trip.
+    # one selectExpr round trip for the date-string synthesis and decimal
+    # math (plan-build cost — see the llm.text module note)
     mm = "lpad(CAST(month(o_orderdate) AS STRING), 2, '0')"
     dd = "lpad(CAST(dayofmonth(o_orderdate) AS STRING), 2, '0')"
     yyyy = "CAST(year(o_orderdate) AS STRING)"
@@ -85,10 +84,10 @@ def dim_customer(raw: DataFrame, country: DataFrame) -> DataFrame:
     (CustomerID, Country), LEFT JOIN country lookup, CustomerID NOT NULL."""
     return (
         raw.where(F.col("CustomerID").isNotNull())
-        .select(
-            surrogate_key("CustomerID", "Country").alias("customer_id"),
-            F.col("CustomerID").alias("customer_code"),
-            F.col("Country").alias("country"),
+        .selectExpr(
+            f"{surrogate_key_sql('CustomerID', 'Country')} AS customer_id",
+            "CustomerID AS customer_code",
+            "Country AS country",
         )
         .distinct()
         .join(F.broadcast(country), F.col("country") == country.nicename, "left")
@@ -101,14 +100,14 @@ def dim_product(raw: DataFrame) -> DataFrame:
     WHERE StockCode IS NOT NULL AND UnitPrice > 0."""
     return (
         raw.where(F.col("StockCode").isNotNull() & (F.col("UnitPrice") > 0))
-        .select(
-            surrogate_key("StockCode", "Description", "UnitPrice").alias("product_id"),
-            F.col("StockCode").alias("stock_code"),
-            F.col("Description").alias("description"),
+        .selectExpr(
+            f"{surrogate_key_sql('StockCode', 'Description', 'UnitPrice')} AS product_id",
+            "StockCode AS stock_code",
+            "Description AS description",
             # Output edge: DECIMAL stays internal (surrogate-key stringify
             # needs it); the emitted column is DOUBLE — the only output type
             # class proven green through the driver's value hash.
-            F.col("UnitPrice").cast("double").alias("price"),
+            "CAST(UnitPrice AS DOUBLE) AS price",
         )
         .distinct()
     )
@@ -123,7 +122,7 @@ def dim_datetime(raw: DataFrame) -> DataFrame:
         .select(F.col("InvoiceDate").alias("datetime_raw"))
         .distinct()
         .select(
-            surrogate_key("datetime_raw").alias("datetime_id"),
+            F.expr(surrogate_key_sql("datetime_raw")).alias("datetime_id"),
             F.col("datetime_raw"),
             dual_format_timestamp(F.col("datetime_raw")).alias("datetime"),
         )

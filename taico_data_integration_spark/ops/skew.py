@@ -58,7 +58,7 @@ def detect_skew(
     """Sampling-based skew advisor for a prospective shuffle key (VERDICT
     r7 #7): measures the mass of the heaviest keys and recommends the
     mitigation the measured crossover supports, so acting on skew no
-    longer requires the user to know tools/skew_probe.py's result.
+    longer requires the user to know the measured crossover.
 
     Method: one column-pruned pass over a Bernoulli sample (default 5%;
     ``sample_fraction=None`` measures exactly) → groupBy(keys).count()
@@ -68,8 +68,8 @@ def detect_skew(
     sample estimate is unbiased and the absolute sample size only sets the
     noise floor (at 5% of 10M rows a 30% key's share has σ ≈ 0.07%).
 
-    Recommendation, from the measured crossover (tools/skew_probe.py →
-    SCALE.md: AQE skew-join alone wins at ≤10M rows even with a 30% hot
+    Recommendation, from the measured crossover (SCALE.md "Measured skew
+    evidence: salted vs AQE on a hot key": AQE skew-join alone wins at ≤10M rows even with a 30% hot
     key; salted x16 + AQE wins 2.0-2.4x at 40M rows):
     - top key share < ``hot_threshold`` → ``"aqe"``: leave it to AQE's
       runtime skew-join splitting, salting buys nothing.

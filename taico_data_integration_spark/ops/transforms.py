@@ -1,51 +1,42 @@
 """Scalar/row-level transform building blocks.
 
-Column-expression ports of the reference's dbt-SQL idioms (SURVEY.md §2.8):
+Expression ports of the reference's dbt-SQL idioms (SURVEY.md §2.8):
 comma-decimal parsing, dbt_utils surrogate keys, normalized-key fuzzy joins,
-canonical-name mapping, dual-format datetime parsing. All pure Column
-expressions — JVM-side, whole-stage-codegen friendly; no UDFs.
+canonical-name mapping, dual-format datetime parsing. Column builders, plus
+``*_sql`` string builders for selectExpr call sites — JVM-side,
+whole-stage-codegen friendly; no UDFs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from ..sqlquote import sql_ident, sql_str
 
 # dbt_utils 1.1.1 generate_surrogate_key null placeholder (SURVEY.md §1.3).
 SURROGATE_NULL = "_dbt_utils_surrogate_key_null_"
 
 
-def comma_decimal(col: Column | str, out_type: str = "double") -> Column:
-    """European comma-decimal string -> number; garbage -> NULL.
+def comma_decimal_sql(expr: str) -> str:
+    """European comma-decimal string expression -> DOUBLE; garbage -> NULL.
 
     Reference: ``cast(replace(spend, ',', '.') as float64)``
     (include/dbt/models/taico/meta/fb_meta_ads_transformed.sql:11-14).
     """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.replace(c, F.lit(","), F.lit(".")).cast(out_type)
+    return f"CAST(replace({expr}, ',', '.') AS DOUBLE)"
 
 
-def surrogate_key(*cols: Column | str) -> Column:
+def surrogate_key_sql(*cols: str) -> str:
     """dbt_utils.generate_surrogate_key parity: md5 of '-'-joined,
-    null-coalesced string casts (include/dbt/models/transform/dim_customer.sql:6).
+    null-coalesced string casts of the named columns
+    (include/dbt/models/transform/dim_customer.sql:6).
 
     concat_ws would *skip* nulls (wrong); dbt coalesces each field to the
     placeholder, so we do too.
     """
-    parts = [
-        F.coalesce((F.col(c) if isinstance(c, str) else c).cast("string"), F.lit(SURROGATE_NULL))
-        for c in cols
-    ]
-    return F.md5(F.concat_ws("-", *parts))
-
-
-def surrogate_key_sql(*cols: str) -> str:
-    """SQL-string twin of surrogate_key for selectExpr call sites (r13
-    plan-build cost — see llm.text module note): identical md5/concat_ws/
-    coalesce tree, one parse instead of ~25 py4j calls per key."""
-    parts = ", ".join(
-        f"coalesce(CAST(`{c}` AS STRING), '{SURROGATE_NULL}')" for c in cols
-    )
+    null = sql_str(SURROGATE_NULL)
+    parts = ", ".join(f"coalesce(CAST({sql_ident(c)} AS STRING), {null})" for c in cols)
     return f"md5(concat_ws('-', {parts}))"
 
 
@@ -93,6 +84,3 @@ def block_code_reformat(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.regexp_replace(c, r"(\d{2})(\d{2})(\d{2})(\d{2})", r"$1-$2-$3-$4")
 
-
-def with_normalized_join_key(df: DataFrame, src_col: str, key_col: str) -> DataFrame:
-    return df.withColumn(key_col, normalize_name(src_col))

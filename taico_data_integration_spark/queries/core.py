@@ -15,10 +15,10 @@ from ..checks.engine import Check, checks_dataframe
 from ..ops.dims import distinct_extract, multi_distinct
 from ..ops.transforms import (
     canonical_map,
-    comma_decimal,
+    comma_decimal_sql,
     dual_format_timestamp,
     normalize_name,
-    surrogate_key,
+    surrogate_key_sql,
 )
 from ._util import T, as_double, dec2, one
 
@@ -325,10 +325,10 @@ GROUP BY 1
 
 def surrogate_customer_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = T(spark, sf_dir, "customer")
-    return c.select(
+    return c.selectExpr(
         "c_custkey",
-        surrogate_key("c_custkey", "c_nationkey").alias("customer_sk"),
-        surrogate_key("c_name", "c_mktsegment").alias("name_sk"),
+        f"{surrogate_key_sql('c_custkey', 'c_nationkey')} AS customer_sk",
+        f"{surrogate_key_sql('c_name', 'c_mktsegment')} AS name_sk",
     )
 
 
@@ -678,14 +678,11 @@ FROM events GROUP BY 1
 
 def comma_decimal_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = T(spark, sf_dir, "lineitem")
-    raw = F.when(F.col("l_linenumber") == 1, F.lit("n/a")).otherwise(
-        F.replace(F.col("l_extendedprice").cast("string"), F.lit("."), F.lit(","))
+    raw = (
+        "CASE WHEN l_linenumber = 1 THEN 'n/a'"
+        " ELSE replace(CAST(l_extendedprice AS STRING), '.', ',') END"
     )
-    return l.select(
-        "l_orderkey",
-        "l_linenumber",
-        comma_decimal(raw).alias("parsed_price"),
-    )
+    return l.selectExpr("l_orderkey", "l_linenumber", f"{comma_decimal_sql(raw)} AS parsed_price")
 
 
 COMMA_DECIMAL_SQL = """

@@ -15,6 +15,7 @@ from ..llm.dedup import (
     lsh_candidate_pairs,
     materialized_shingles,
     minhash_band_keys_fast,
+    minhash_sql,
     simhash_bits,
 )
 from ..llm.multimodal import (
@@ -31,16 +32,17 @@ from ..llm.similarity import cosine_topk_bruteforce, cosine_topk_ivf, embedding_
 from ..llm.text import (
     STOPWORDS,
     bpe_ish_token_count,
-    detect_language,
-    fingerprint,
+    fingerprint_sql,
     punct_count,
-    quality_score,
-    tokens,
-    whitespace_token_count,
+    quality_inputs_sql,
+    quality_score_sql,
+    token_count_sql,
+    tokens_sql,
+    with_language,
 )
 from ._util import T
 
-# Canonical normalized text in DuckDB (matches llm.text.normalized_text).
+# Canonical normalized text in DuckDB (matches llm.text.norm_sql).
 _NORM = r"regexp_replace(lower(trim(text)), '\s+', ' ', 'g')"
 _SHINGLES_CTE = f"""
 toks AS (SELECT doc_id, string_split({_NORM}, ' ') AS ws FROM documents),
@@ -222,12 +224,7 @@ def minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = T(spark, sf_dir, "documents")
     base = materialized_shingles(d, "text", "doc_id", 3)
 
-    # SQL-string twin of the per-seed Column lambdas (see llm.dedup module
-    # note on py4j plan-build cost) — identical md5 math.
-    mh_sql = ", ".join(
-        f"array_min(transform(__sh, s -> md5(concat_ws(':', '{i}', s))))"
-        for i in range(16)
-    )
+    mh_sql = ", ".join(minhash_sql("__sh", i) for i in range(16))
     sigs = base.selectExpr("doc_id", f"array({mh_sql}) AS sig", "__sh")
     bands = minhash_band_keys_fast(d, shingled=base)
     cands = lsh_candidate_pairs(bands)
@@ -845,7 +842,7 @@ def text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = T(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
-        whitespace_token_count("text").alias("n_tokens"),
+        F.expr(token_count_sql(tokens_sql("text"))).alias("n_tokens"),
         bpe_ish_token_count("text").alias("n_bpe_tokens"),
         punct_count("text").alias("n_punct"),
     )
@@ -861,11 +858,7 @@ FROM documents
 
 
 def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..llm.text import with_language
-
     d = T(spark, sf_dir, "documents", fan_out=True)
-    # staged form: one tokenization per row instead of one per hit reference
-    # (~28x for 4 languages); results identical to detect_language
     return with_language(d, "text", keep_cols=("doc_id", "lang"))
 
 
@@ -895,7 +888,8 @@ FROM h
 
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = T(spark, sf_dir, "documents")
-    return d.select("doc_id", quality_score("text").alias("quality"))
+    qual = quality_score_sql(*quality_inputs_sql("text", tokens_sql("text")))
+    return d.selectExpr("doc_id", f"{qual} AS quality")
 
 
 def text_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -908,7 +902,7 @@ def text_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = T(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(tokens("text")).alias("token")).where(
+    toks = d.selectExpr("doc_id", f"explode({tokens_sql('text')}) AS token").where(
         F.col("token") != ""
     )
     tf = toks.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
@@ -939,7 +933,7 @@ def doc_chunking(spark: SparkSession, sf_dir: str, window: int = 64, stride: int
     shuffle at all: chunks = explode(sequence) over each doc's token array.
     Chunk i covers tokens [i*stride, i*stride + window)."""
     d = T(spark, sf_dir, "documents")
-    toks = tokens("text")
+    toks = F.expr(tokens_sql("text"))
     max_i = F.floor((F.size(toks) - F.lit(1)) / F.lit(stride)).cast("int")
     chunked = d.select(
         "doc_id",
@@ -1007,7 +1001,7 @@ FROM documents
 
 def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = T(spark, sf_dir, "documents")
-    return d.select("doc_id", fingerprint("text").alias("fingerprint"))
+    return d.selectExpr("doc_id", f"{fingerprint_sql('text')} AS fingerprint")
 
 
 FINGERPRINT_SQL = f"""
@@ -1020,9 +1014,7 @@ SELECT doc_id, md5({_NORM}) AS fingerprint FROM documents
 
 def token_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = T(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id", F.explode(F.split(F.regexp_replace(F.lower(F.trim("text")), r"\s+", " "), " ")).alias("token")
-    )
+    toks = d.selectExpr("doc_id", f"explode({tokens_sql('text')}) AS token")
     return toks.groupBy("token").agg(
         F.count(F.lit(1)).alias("tf"), F.countDistinct("doc_id").alias("df")
     )
@@ -1040,7 +1032,7 @@ GROUP BY 1
 
 def doc_length_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = T(spark, sf_dir, "documents")
-    n = whitespace_token_count("text")
+    n = F.expr(token_count_sql(tokens_sql("text")))
     return (
         d.select("lang", n.alias("n_tok"))
         .groupBy("lang")

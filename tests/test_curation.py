@@ -11,9 +11,10 @@ from taico_data_integration_spark.llm.curation import (
     curation_flags,
     dataset_split,
     redact_pii,
-    repetition_ratio,
+    repetition_ratio_sql,
     split_bucket,
 )
+from taico_data_integration_spark.llm.text import tokens_sql
 
 
 def test_redact_pii_planted(spark):
@@ -44,7 +45,9 @@ def test_repetition_ratio_bounds(spark):
     df = spark.createDataFrame(
         [(1, "a a a a"), (2, "a b c d"), (3, "x")], ["id", "t"]
     )
-    rows = {r["id"]: r["rep"] for r in df.select("id", repetition_ratio("t").alias("rep")).collect()}
+    toks = tokens_sql("t")
+    rep = repetition_ratio_sql(f"size({toks})", f"size(array_distinct({toks}))")
+    rows = {r["id"]: r["rep"] for r in df.selectExpr("id", f"{rep} AS rep").collect()}
     assert rows[1] == 0.75  # 1 distinct of 4
     assert rows[2] == 0.0
     assert rows[3] == 0.0

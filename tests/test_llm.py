@@ -27,7 +27,12 @@ from taico_data_integration_spark.llm.similarity import (
     cosine_topk_lsh,
     embedding_neardup_pairs,
 )
-from taico_data_integration_spark.llm.text import detect_language, quality_score
+from taico_data_integration_spark.llm.text import (
+    quality_inputs_sql,
+    quality_score_sql,
+    tokens_sql,
+    with_language,
+)
 
 BASE = "the quick brown fox jumps over the lazy dog again and again today"
 NEAR = "the quick brown fox jumps over the lazy cat again and again today"
@@ -229,9 +234,10 @@ def test_language_and_quality(spark):
             Row(doc_id=3, text="xyzzy plugh qwerty"),
         ]
     )
-    langs = {r.doc_id: r.v for r in df.select("doc_id", detect_language("text").alias("v")).collect()}
+    langs = {r.doc_id: r.v for r in with_language(df, keep_cols=("doc_id",), out="v").collect()}
     assert langs == {1: "en", 2: "de", 3: "unknown"}
-    q = {r.doc_id: r.v for r in df.select("doc_id", quality_score("text").alias("v")).collect()}
+    qual = quality_score_sql(*quality_inputs_sql("text", tokens_sql("text")))
+    q = {r.doc_id: r.v for r in df.selectExpr("doc_id", f"{qual} AS v").collect()}
     assert q[1] > q[3]
 
 
@@ -942,6 +948,61 @@ def test_connected_components_uses_reliable_checkpoints_when_configured(spark, t
         # localCheckpoint default (tmp_path is deleted after this test)
         getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
     assert sc.getCheckpointDir() is None
+
+
+def test_connected_components_probe_pin_is_reliable_when_configured(spark, tmp_path, monkeypatch):
+    """With a checkpoint dir set, the over-cap path must not pin the pair
+    list with an executor-local checkpoint: the probe frame goes through the
+    same reliable checkpoint as every loop iteration."""
+    from taico_data_integration_spark.llm.dedup import connected_components
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 23)],
+        ["doc_a", "doc_b"],
+    )
+
+    def no_local(self, *a, **k):
+        raise AssertionError("localCheckpoint used with a checkpoint dir set")
+
+    sc = spark.sparkContext
+    sc.setCheckpointDir(str(tmp_path / "cc_probe_ckpt"))
+    try:
+        monkeypatch.setattr(type(pairs), "localCheckpoint", no_local)
+        got = {
+            (r.doc_id, r.cluster_id)
+            for r in connected_components(pairs, small_graph_max_edges=3).collect()
+        }
+    finally:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
+    assert got == {
+        (1, 1), (2, 1), (3, 1),
+        (10, 10), (11, 10),
+        (20, 20), (21, 20), (22, 20), (23, 20),
+    }
+
+
+def test_sql_builders_quote_identifiers_and_literals(spark, monkeypatch):
+    """Column names with a backtick and stopwords with an apostrophe or a
+    backslash parse as themselves in the SQL expression builders."""
+    from taico_data_integration_spark.llm import text
+    from taico_data_integration_spark.sqlquote import sql_ident
+
+    df = spark.createDataFrame(
+        [(1, "The cat is on the mat"), (2, "c'est la vie dans la rue")],
+        ["doc_id", "we`ird"],
+    )
+    got = {
+        r.doc_id: r.detected_lang
+        for r in text.with_language(df, "we`ird", keep_cols=("doc_id",)).collect()
+    }
+    assert got == {1: "en", 2: "fr"}
+
+    monkeypatch.setitem(text.STOPWORDS, "fr", ["c'est", "la", "a\\b"])
+    hits = text.stopword_hits_sql(text.tokens_sql(sql_ident("we`ird")), "fr")
+    rows = spark.createDataFrame(
+        [(1, "C'est la vie"), (2, "a\\b a\\b"), (3, "cest")], ["doc_id", "we`ird"]
+    ).selectExpr("doc_id", f"{hits} AS n").collect()
+    assert {r.doc_id: r.n for r in rows} == {1: 2, 2: 2, 3: 0}
 
 
 def test_ivf_assign_join_path_equals_literal_path(spark):

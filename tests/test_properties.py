@@ -14,9 +14,9 @@ from hypothesis import strategies as st
 
 from taico_data_integration_spark.ops.transforms import (
     SURROGATE_NULL,
-    comma_decimal,
+    comma_decimal_sql,
     normalize_name,
-    surrogate_key,
+    surrogate_key_sql,
 )
 
 
@@ -45,7 +45,7 @@ text_strategy = st.one_of(
 @given(st.lists(text_strategy, min_size=1, max_size=20))
 def test_comma_decimal_matches_python(sc, values):
     df = sc.createDataFrame([(v,) for v in values], "s string")
-    got = [r.v for r in df.select(comma_decimal("s").alias("v")).collect()]
+    got = [r.v for r in df.selectExpr(f"{comma_decimal_sql('s')} AS v").collect()]
     expected = [_py_comma_decimal(v) for v in values]
     for g, e in zip(got, expected):
         if e is None or g is None:
@@ -62,7 +62,7 @@ def test_surrogate_key_matches_python(sc, col_a, col_b):
     n = min(len(col_a), len(col_b))
     rows = list(zip(col_a[:n], col_b[:n]))
     df = sc.createDataFrame(rows, "a string, b string")
-    got = [r.k for r in df.select(surrogate_key("a", "b").alias("k")).collect()]
+    got = [r.k for r in df.selectExpr(f"{surrogate_key_sql('a', 'b')} AS k").collect()]
     expected = [
         hashlib.md5(
             f"{a if a is not None else SURROGATE_NULL}-{b if b is not None else SURROGATE_NULL}".encode()

@@ -190,3 +190,30 @@ def test_tenant_partition_pruning_and_scoped_swap(spark, tmp_path):
         cust.where("company_id = 2").agg(F.min("c_acctbal")).collect()[0][0] + 1000.0
     )
     assert abs(got - want) < 1e-9
+
+
+def test_runtime_conf_memo_retries_after_a_failed_set(spark, monkeypatch):
+    """A session is memoized as conf-ensured only when every conf.set
+    succeeded: a set that raised is retried on the next load_table."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from taico_data_integration_spark import catalog
+
+    calls = []
+
+    def flaky_set(self, key, value):
+        calls.append(key)
+        if len(calls) == 1:
+            raise RuntimeError("transient conf failure")
+
+    catalog._confs_ensured.discard(spark)
+    monkeypatch.setattr(RuntimeConfig, "get", lambda self, key, default=None: None)
+    monkeypatch.setattr(RuntimeConfig, "set", flaky_set)
+    load_table(spark, SF_DIR, "nation")
+    assert spark not in catalog._confs_ensured
+    n_first = len(calls)
+    load_table(spark, SF_DIR, "nation")
+    assert len(calls) == 2 * n_first  # every conf retried
+    assert spark in catalog._confs_ensured
+    load_table(spark, SF_DIR, "nation")
+    assert len(calls) == 2 * n_first  # memoized after a clean pass

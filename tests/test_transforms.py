@@ -11,10 +11,10 @@ from taico_data_integration_spark.ops.transforms import (
     SURROGATE_NULL,
     block_code_reformat,
     canonical_map,
-    comma_decimal,
+    comma_decimal_sql,
     dual_format_timestamp,
     normalize_name,
-    surrogate_key,
+    surrogate_key_sql,
 )
 
 
@@ -24,14 +24,14 @@ def _one(spark, **cols):
 
 def test_comma_decimal_parses_and_nulls_garbage(spark):
     df = spark.createDataFrame([Row(s="12,34"), Row(s="5.5"), Row(s="n/a"), Row(s=None)])
-    got = [r.v for r in df.select(comma_decimal("s").alias("v")).collect()]
+    got = [r.v for r in df.selectExpr(f"{comma_decimal_sql('s')} AS v").collect()]
     assert got == [12.34, 5.5, None, None]
 
 
 def test_surrogate_key_matches_dbt_utils_semantics(spark):
     # dbt_utils 1.1.1: md5 of '-'-joined null-coalesced casts
     df = spark.createDataFrame([("x", None)], "a string, b string")
-    got = df.select(surrogate_key("a", "b").alias("k")).collect()[0].k
+    got = df.selectExpr(f"{surrogate_key_sql('a', 'b')} AS k").collect()[0].k
     expected = hashlib.md5(f"x-{SURROGATE_NULL}".encode()).hexdigest()
     assert got == expected
 
