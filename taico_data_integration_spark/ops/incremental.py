@@ -333,10 +333,20 @@ class TableStore(TableFormat):
 
     _BLOOM_MEM_MAX = 16
 
-    def _bloom_mem_get(self, table: str, version: int, col: str) -> dict | None:
-        rec = self._bloom_mem.get((table, version, col))
+    def _bloom_cached(self, table: str, version: int, col: str) -> dict | None:
+        """The column's already-built filter set for the version: the
+        in-process LRU first, then the sidecar (only the probed column's
+        rows load — VERDICT r7 #1 — and are cached); None when never
+        built."""
+        key = (table, version, col)
+        rec = self._bloom_mem.get(key)
         if rec is not None:
-            self._bloom_mem.move_to_end((table, version, col))
+            self._bloom_mem.move_to_end(key)
+            return rec
+        bp = self._bloom_path(table, version)
+        rec = self._bloom_load(bp, col) if self.commit.io_exists(bp) else None
+        if rec is not None:
+            self._bloom_mem_put(table, version, col, rec)
         return rec
 
     def _bloom_mem_put(self, table: str, version: int, col: str, rec: dict) -> None:
@@ -364,6 +374,22 @@ class TableStore(TableFormat):
         rec = self.commit.read_pointer(tdir)
         current = rec.get("current") if rec else None
         return {"current": current, "versions": versions}
+
+    def _entry(self, table: str, version: int | None = None) -> dict:
+        """The committed version entry ``{v, path, ts}`` for ``version``
+        (default: current) — the one resolver every method goes through,
+        so a missing table, a never-committed or a vacuumed version is
+        always the documented ``ValueError``, never a bare StopIteration."""
+        meta = self._read_meta(table)
+        v = meta["current"] if version is None else version
+        entry = next((e for e in meta["versions"] if e["v"] == v), None)
+        if entry is None:
+            raise ValueError(
+                f"no current version for {table}"
+                if v is None
+                else f"version {v} not committed (or vacuumed) for {table}"
+            )
+        return entry
 
     # ---- share-by-reference version manifests (round 10) -------------
     #
@@ -1263,13 +1289,7 @@ class TableStore(TableFormat):
         return self._read_meta(table)["current"] is not None
 
     def read(self, table: str, version: int | None = None) -> DataFrame:
-        meta = self._read_meta(table)
-        v = meta["current"] if version is None else version
-        entry = next((e for e in meta["versions"] if e["v"] == v), None)
-        if entry is None:
-            # same contract class as rollback-to-uncommitted: a vacuumed or
-            # never-committed version is a ValueError, not a StopIteration
-            raise ValueError(f"version {v} not committed (or vacuumed) for {table}")
+        entry = self._entry(table, version)
         fm = self._version_filemap(table, entry)
         if self._load_manifest(table, entry) is None:
             # pre-r10 version: plain directory read, old behavior bit for bit
@@ -1579,8 +1599,7 @@ class TableStore(TableFormat):
         flatten)."""
         import math
 
-        meta = self._read_meta(table)
-        entry = next(e for e in meta["versions"] if e["v"] == meta["current"])
+        entry = self._entry(table)
         rels = list(self._version_filemap(table, entry))
         files_before = len(rels)
         partition_by = self._resolve_partition_by(table, partition_by, rels)
@@ -1596,8 +1615,7 @@ class TableStore(TableFormat):
         # conflict-checked: a compaction racing a delete/merge must not
         # resurrect its base snapshot over the mutation's result
         version = self.write(table, shaped, partition_by, _expect_base=entry["v"])
-        new_entry = next(e for e in self._read_meta(table)["versions"] if e["v"] == version)
-        files_after = len(self._version_filemap(table, new_entry))
+        files_after = len(self._version_filemap(table, self._entry(table, version)))
         return {
             "version": version,
             "files_before": files_before,
@@ -1611,12 +1629,7 @@ class TableStore(TableFormat):
         (:meth:`_read_rels` reads each generation under its own
         ``basePath`` and unions). The quantity the chain budget bounds:
         plan size and scan-setup cost grow with it, results don't."""
-        meta = self._read_meta(table)
-        v = meta["current"] if version is None else version
-        entry = next((e for e in meta["versions"] if e["v"] == v), None)
-        if entry is None:
-            raise ValueError(f"version {v} not committed (or vacuumed) for {table}")
-        fm = self._version_filemap(table, entry)
+        fm = self._version_filemap(table, self._entry(table, version))
         return len(set(fm.values())) if fm else 0
 
     def _enforce_chain_budget(self, table: str) -> None:
@@ -1670,11 +1683,7 @@ class TableStore(TableFormat):
         fallback, and non-Hive nesting degrades to flatten), ``[]``
         flattens explicitly, a list is taken as given."""
         if partition_by is None:
-            meta = self._read_meta(table)
-            entry = next(
-                e for e in meta["versions"] if e["v"] == meta["current"]
-            )
-            rec = self._recorded_partition_by(table, entry)
+            rec = self._recorded_partition_by(table, self._entry(table))
             if rec is not None:
                 return rec or None
             try:
@@ -1684,9 +1693,7 @@ class TableStore(TableFormat):
         return list(partition_by) or None
 
     def _current_rels(self, table: str) -> list[str]:
-        meta = self._read_meta(table)
-        entry = next(e for e in meta["versions"] if e["v"] == meta["current"])
-        return list(self._version_filemap(table, entry))
+        return list(self._version_filemap(table, self._entry(table)))
 
     def current_partition_columns(self, table: str) -> list[str]:
         """The current version's Hive partition columns (``[]`` when
@@ -1696,9 +1703,7 @@ class TableStore(TableFormat):
         losing partition pruning for every downstream reader. Prefers the
         RECORDED spec (partition evolution, round 12); path inference is
         the legacy manifest-less fallback."""
-        meta = self._read_meta(table)
-        entry = next(e for e in meta["versions"] if e["v"] == meta["current"])
-        rec = self._recorded_partition_by(table, entry)
+        rec = self._recorded_partition_by(table, self._entry(table))
         if rec is not None:
             return rec
         try:
@@ -1727,7 +1732,7 @@ class TableStore(TableFormat):
         partition columns, so each partition occupies a contiguous task
         range and its files stay disjoint on the cluster key; ``[]``
         flattens explicitly."""
-        base = self._read_meta(table)["current"]
+        base = self._entry(table)["v"]
         pcols = self._resolve_partition_by(
             table, partition_by, self._current_rels(table)
         )
@@ -1756,7 +1761,7 @@ class TableStore(TableFormat):
         (at 100 TB they come from table stats, not an extra scan).
         Hive-partitioned layouts are preserved by default, the Z-curve
         applying WITHIN each partition (round 9); ``[]`` flattens."""
-        base = self._read_meta(table)["current"]
+        base = self._entry(table)["v"]
         pcols = self._resolve_partition_by(
             table, partition_by, self._current_rels(table)
         )
@@ -1838,11 +1843,8 @@ class TableStore(TableFormat):
 
         import pyarrow.parquet as pq
 
-        meta = self._read_meta(table)
-        v = meta["current"] if version is None else version
-        entry = next((e for e in meta["versions"] if e["v"] == v), None)
-        if entry is None:
-            raise ValueError(f"version {v} not committed (or vacuumed) for {table}")
+        entry = self._entry(table, version)
+        v = entry["v"]
         sp = self._stats_path(table, v)
         raw = self.commit.io_get(sp)
         manifest: dict = json.loads(raw) if raw is not None else {"files": {}}
@@ -1882,7 +1884,7 @@ class TableStore(TableFormat):
         cand_entries = [
             (table, e)
             for e in sorted(
-                (e for e in meta["versions"] if e["v"] != v),
+                (e for e in self._read_meta(table)["versions"] if e["v"] != v),
                 key=lambda e: e["v"],
                 reverse=True,
             )
@@ -2114,9 +2116,11 @@ class TableStore(TableFormat):
     def _stat_keeps(self, stat: dict, rec: dict, clo, chi) -> bool:
         """File-level interval test for one column: False ONLY when the
         file's stats PROVE no row can satisfy ``[clo, chi]`` (either bound
-        may be None = open side). Shared by :meth:`read_pruned` and
-        :meth:`read_point` so every caller inherits the same type-hazard
-        rules:
+        may be None = open side). Shared by :meth:`read_pruned`,
+        :meth:`delete_where` and the key probe
+        (:meth:`_in_candidates_multi`, behind read_point / read_in /
+        delete_in / merge_in) so every caller inherits the same
+        type-hazard rules:
 
         - bounds go through the same order-preserving normalization as the
           stored stats (datetime/date -> fixed-width ISO);
@@ -2215,11 +2219,8 @@ class TableStore(TableFormat):
         bounds = {c: b for c, b in bounds.items() if b != (None, None)}
         if not bounds:
             raise ValueError("read_pruned needs at least one bounded column")
-        meta = self._read_meta(table)
-        v = meta["current"] if version is None else version
-        entry = next((e for e in meta["versions"] if e["v"] == v), None)
-        if entry is None:
-            raise ValueError(f"version {v} not committed (or vacuumed) for {table}")
+        entry = self._entry(table, version)
+        v = entry["v"]
         manifest = self.collect_file_stats(table, list(bounds), version=v)
         keep = []
         for rel, rec in manifest["files"].items():
@@ -2381,32 +2382,6 @@ class TableStore(TableFormat):
                     rec["files"][rel] = blob
         return rec
 
-    def _stored_bloom_sizing(
-        self, table: str, meta: dict, col: str
-    ) -> tuple[int, int] | None:
-        """Sizing (m, k) of the newest already-built filter for ``col``
-        in any candidate sidecar the probed version could copy-forward
-        from — the table's own versions and, for a shallow clone, the
-        source's. Implicit read-side builds adopt it (round 12): a fresh
-        sizing computed from the table can never match the stored rows,
-        so without this the first probe after EVERY COW commit (or on a
-        fresh clone) re-hashed the whole table instead of copying the
-        still-valid filters forward (measured at 60M rows: 110 s rebuild
-        vs seconds of row copies)."""
-        cand = [(table, e) for e in meta["versions"]]
-        cl = self._clone_info(table)
-        if cl is not None:
-            cand += [
-                (cl["of"], e) for e in self._read_meta(cl["of"])["versions"]
-            ]
-        for tbl, e in sorted(cand, key=lambda te: te[1]["v"], reverse=True):
-            p = self._bloom_path(tbl, e["v"])
-            if self.commit.io_exists(p):
-                mk = self._bloom_cols(p).get(col)
-                if mk is not None:
-                    return mk
-        return None
-
     @staticmethod
     def bloom_sizing(expected_items: int, fpp: float = 0.01) -> tuple[int, int]:
         """Optimal (num_bits, num_hashes) for ``expected_items`` distinct
@@ -2487,11 +2462,8 @@ class TableStore(TableFormat):
         """
         if expected_items_per_file is not None:
             num_bits, num_hashes = self.bloom_sizing(expected_items_per_file, fpp)
-        meta = self._read_meta(table)
-        v = meta["current"] if version is None else version
-        entry = next((e for e in meta["versions"] if e["v"] == v), None)
-        if entry is None:
-            raise ValueError(f"version {v} not committed (or vacuumed) for {table}")
+        entry = self._entry(table, version)
+        v = entry["v"]
         bp = self._bloom_path(table, v)
         existing = self._bloom_cols(bp) if self.commit.io_exists(bp) else {}
         for c, (m, k) in existing.items():
@@ -2540,7 +2512,9 @@ class TableStore(TableFormat):
             # because a clone-LOCAL generation number can coincide with
             # a post-clone source version number without sharing bytes.
             cl = self._clone_info(table)
-            cand_list = [(table, e) for e in meta["versions"] if e["v"] != v]
+            cand_list = [
+                (table, e) for e in self._read_meta(table)["versions"] if e["v"] != v
+            ]
             if cl is not None:
                 cand_list += [
                     (cl["of"], e)
@@ -2745,17 +2719,56 @@ class TableStore(TableFormat):
             "reused_files": {c: len(r) for c, r in reused.items()},
         }
         for c in cols:
-            rec = self._bloom_mem_get(table, v, c)
+            rec = self._bloom_cached(table, v, c)
             if rec is None:
-                rec = self._bloom_load(bp, c) if self.commit.io_exists(bp) else None
-                if rec is None:
-                    # a column that is all-NULL in every file emits no rows
-                    # (equality never matches NULL): empty filter set =>
-                    # read_point keeps files conservatively via stats only
-                    rec = {"m": num_bits, "k": num_hashes, "files": {}}
+                # a column that is all-NULL in every file emits no rows
+                # (equality never matches NULL): empty filter set => the
+                # key probe keeps files conservatively via stats only
+                rec = {"m": num_bits, "k": num_hashes, "files": {}}
                 self._bloom_mem_put(table, v, c, rec)
             manifest["cols"][c] = rec
         return manifest
+
+    def _bloom_build(
+        self,
+        table: str,
+        v: int,
+        col: str,
+        num_bits: int,
+        num_hashes: int,
+        expected_items_per_file: int | None,
+        fpp: float,
+    ) -> dict:
+        """Implicit read-side build of ``col``'s filter set for version
+        ``v``. Adopts the sizing (m, k) of the newest already-built filter
+        for ``col`` in any sidecar the version could copy-forward from —
+        the table's own versions and, for a shallow clone, the source's
+        (round 12): a fresh sizing can never match the stored rows, so
+        without this the first probe after EVERY COW commit (or on a fresh
+        clone) re-hashed the whole table instead of copying the still-valid
+        filters forward (measured at 60M rows: 110 s rebuild vs seconds of
+        row copies). Only a column never indexed anywhere uses the given
+        sizing."""
+        cand = [(table, e) for e in self._read_meta(table)["versions"]]
+        cl = self._clone_info(table)
+        if cl is not None:
+            cand += [(cl["of"], e) for e in self._read_meta(cl["of"])["versions"]]
+        for tbl, e in sorted(cand, key=lambda te: te[1]["v"], reverse=True):
+            p = self._bloom_path(tbl, e["v"])
+            mk = self._bloom_cols(p).get(col) if self.commit.io_exists(p) else None
+            if mk is not None:
+                num_bits, num_hashes = mk
+                expected_items_per_file = None
+                break
+        return self.collect_file_blooms(
+            table,
+            [col],
+            version=v,
+            num_bits=num_bits,
+            num_hashes=num_hashes,
+            expected_items_per_file=expected_items_per_file,
+            fpp=fpp,
+        )["cols"][col]
 
     def read_point(
         self,
@@ -2768,194 +2781,40 @@ class TableStore(TableFormat):
         expected_items_per_file: int | None = None,
         fpp: float = 0.01,
     ) -> tuple[DataFrame, dict]:
-        """Equality point-lookup read, file-pruned by BOTH manifests:
-        min/max stats first (free — same rules as :meth:`read_pruned` via
-        :meth:`_stat_keeps`), then the per-file bloom (builds on first use,
-        cached per immutable version). The equality residual is always
-        applied in Spark, so a bloom false positive costs one extra file
-        scan, never a wrong row; a file with no bloom entry (all-null in
-        the column, or a column added later) is kept conservatively unless
-        its stats prove it empty of matches. NULL probes are rejected —
-        equality never matches NULL; use an is-null filter instead.
+        """Equality point-lookup read: the one-value :meth:`read_in`, plus
+        one policy of its own — the column's per-file bloom is BUILT on
+        first use (cached per immutable version) before the probe runs, so
+        a lookup on a column the layout does not cluster on still skips
+        files, and every later lookup on the version reuses the filter.
+        The build adopts the sizing already stored for the column in a
+        candidate sidecar (own versions; clone source) so the copy-forward
+        engages; otherwise it uses ``num_bits``/``num_hashes`` or
+        ``expected_items_per_file``/``fpp``. An already-built filter is
+        reused WHATEVER its sizing (rebuilding a version's bloom with
+        different params is an explicit :meth:`collect_file_blooms`
+        decision, not a read-side surprise).
 
-        Numeric edge semantics MATCH Spark's own ``col = lit`` coercion
-        (ADVICE r7, pinned by tests): a NaN probe on a float/double column
-        returns the NaN rows (Spark treats NaN = NaN as TRUE; stats are
-        bypassed because parquet min/max exclude NaN, the bloom still
-        skips); an integer literal a double/float cast rounds probes for
-        the rounded value exactly as Spark's type promotion would; a
-        non-float-representable double against a FLOAT column, or any
-        truncating cast against an integral column, provably matches
-        nothing and short-circuits to an empty scan.
+        Everything else is the shared key probe
+        (:meth:`_in_candidates_multi`): min/max stats first, then the
+        bloom, and the equality residual is always applied in Spark, so a
+        bloom false positive costs one extra file scan, never a wrong row.
+        NULL probes are rejected — equality never matches NULL; use an
+        is-null filter instead. Numeric and temporal edge semantics match
+        Spark's own ``col = lit`` coercion (ADVICE r7, pinned by tests): a
+        NaN probe on a float/double column returns the NaN rows; a value
+        the column-type cast provably changes (2.5 against a bigint, a
+        non-midnight timestamp against a DATE) matches nothing and reads no
+        file; an uncastable value is a loud ValueError.
 
         Returns ``(df, report)``; the report carries files_total /
         files_read / files_skipped plus the per-stage skip counts, so scan
         I/O claims are testable (the same contract as read_pruned)."""
-        if value is None:
-            raise ValueError("read_point(value=None): equality never matches NULL")
-        meta = self._read_meta(table)
-        v = meta["current"] if version is None else version
-        entry = next((e for e in meta["versions"] if e["v"] == v), None)
-        if entry is None:
-            raise ValueError(f"version {v} not committed (or vacuumed) for {table}")
-        stats = self.collect_file_stats(table, [col], version=v)
-        # reuse an already-built filter WHATEVER its sizing (rebuilding a
-        # version's bloom with different params is an explicit
-        # collect_file_blooms decision, not a read-side surprise). The
-        # sidecar is columnar: only the PROBED column's filter rows are
-        # loaded (VERDICT r7 #1), then LRU-cached in process
-        bloom = self._bloom_mem_get(table, v, col)
-        bp = self._bloom_path(table, v)
-        if bloom is None and self.commit.io_exists(bp):
-            bloom = self._bloom_load(bp, col)
-            if bloom is not None:
-                self._bloom_mem_put(table, v, col, bloom)
-        if bloom is None:
-            # implicit build: adopt the sizing already stored for this
-            # column in a candidate sidecar (own versions; clone source)
-            # so the copy-forward engages instead of a full re-scan
-            stored = self._stored_bloom_sizing(table, meta, col)
-            if stored is not None:
-                num_bits, num_hashes = stored
-                expected_items_per_file = None
-            bloom = self.collect_file_blooms(
-                table,
-                [col],
-                version=v,
-                num_bits=num_bits,
-                num_hashes=num_hashes,
-                expected_items_per_file=expected_items_per_file,
-                fpp=fpp,
-            )["cols"][col]
-        m, k = bloom["m"], bloom["k"]
-        # probe bits computed IN Spark with the lit cast to the column's own
-        # type: xxhash64 is type-sensitive (int32 and int64 hash differently),
-        # so the probe must hash exactly what the build hashed
-        dtype = {
-            f.name: f.dataType.simpleString()
-            for f in self._version_schema(table, entry)
-        }.get(col)
-        if dtype is None:
-            raise ValueError(f"column {col} not in {table}")
-        probe = (
-            self.spark.range(1)
-            .select(
-                F.lit(value).cast(dtype).alias("cv"),
-                *[
-                    F.pmod(
-                        F.xxhash64(F.lit(i), F.lit(value).cast(dtype)), F.lit(m)
-                    ).alias(f"p{i}")
-                    for i in range(k)
-                ]
+        v = self._entry(table, version)["v"]
+        if self._bloom_cached(table, v, col) is None:
+            self._bloom_build(
+                table, v, col, num_bits, num_hashes, expected_items_per_file, fpp
             )
-            .first()
-        )
-        # cast-fidelity guard: the probe hashes CAST(value AS coltype), so a
-        # value the cast cannot represent must not silently match its
-        # truncation — read_point(bigint_col, 2.5) casting to 2 and matching
-        # id=2 would be a wrong answer (Spark's own `col = 2.5` widens the
-        # COLUMN and matches nothing). Uncastable -> loud error; a numeric
-        # value changed by the cast -> provably no row equals it -> empty.
-        if probe["cv"] is None:
-            raise ValueError(
-                f"read_point value {value!r} is not castable to {col}'s type {dtype}"
-            )
-        import datetime as _dt
-        import math as _math
-
-        value_is_nan = isinstance(value, float) and _math.isnan(value)
-        # Which lossy casts mean "no row can match"? Mirror Spark's own
-        # binary-comparison coercion, verified empirically (tests):
-        # - DOUBLE column: Spark widens ANY numeric literal to double ==
-        #   exactly our cast, so the cast value is what Spark compares —
-        #   never short-circuit (ADVICE r7: includes NaN, where NaN = NaN
-        #   is TRUE in Spark, and 2**53+1, which matches its rounding).
-        # - FLOAT column + int literal: Spark's common type is FLOAT (long
-        #   sits below float in the promotion chain) — the literal is cast
-        #   like ours, so flow through even when rounding occurred.
-        # - FLOAT column + float literal: Spark widens the COLUMN to
-        #   double, so a double the float cast changes can match no stored
-        #   float — short-circuit empty IS Spark's answer; except NaN,
-        #   which survives the cast and matches stored NaN.
-        # - integral/decimal column: a cast that changes the value is a
-        #   truncation no stored value equals (Spark widens the column) —
-        #   short-circuit empty.
-        cast_is_sparks_comparison = dtype == "double" or (
-            dtype == "float"
-            and (value_is_nan or (isinstance(value, int) and not isinstance(value, bool)))
-        )
-        lossy_numeric = (
-            not cast_is_sparks_comparison
-            and isinstance(value, (int, float))
-            and not isinstance(value, bool)
-            and isinstance(probe["cv"], (int, float))
-            and probe["cv"] != value
-        )
-        # same hazard for a timestamp probed against a DATE column: the cast
-        # drops the time-of-day, but Spark's own comparison widens the
-        # column, so a non-midnight timestamp can never equal a DATE value
-        lossy_temporal = (
-            isinstance(value, _dt.datetime)
-            and isinstance(probe["cv"], _dt.date)
-            and not isinstance(probe["cv"], _dt.datetime)
-            and value.replace(tzinfo=None) != _dt.datetime.combine(probe["cv"], _dt.time())
-        )
-        # when the cast IS Spark's comparison (float/double columns), the
-        # EFFECTIVE probe value is the cast result — the stats interval
-        # test must use it too (Python compares int/float exactly, so the
-        # raw 2**53+1 sits above a file whose max is the stored 2**53 that
-        # Spark's rounded literal would match)
-        stats_value = probe["cv"] if cast_is_sparks_comparison else value
-        if lossy_numeric or lossy_temporal:
-            report = {
-                "files_total": len(stats["files"]),
-                "files_read": 0,
-                "files_skipped": len(stats["files"]),
-                "skipped_by_stats": len(stats["files"]),
-                "skipped_by_bloom": 0,
-            }
-            return self.read(table, version=v).where(F.lit(False)), report
-        positions = [probe[f"p{i}"] for i in range(k)]
-
-        def bloom_keeps(rel: str) -> bool:
-            words = bloom["files"].get(rel)
-            if words is None:
-                return True  # no filter for this file — conservative
-            for pos in positions:
-                w = int.from_bytes(words[(pos >> 6) * 8 : (pos >> 6) * 8 + 8], "little")
-                if not (w >> (pos & 63)) & 1:
-                    return False
-            return True
-
-        keep, by_stats, by_bloom = [], 0, 0
-        for rel, rec in stats["files"].items():
-            # NaN probes bypass the stats stage: parquet writers exclude
-            # NaN from min/max bounds, so a file holding NaN plus ordinary
-            # values has finite stats that would WRONGLY exclude it (every
-            # NaN comparison is false). The bloom indexed NaN like any
-            # value (xxhash64 canonicalizes NaN bit patterns), so skipping
-            # still happens there.
-            if not value_is_nan and not self._stat_keeps(
-                rec.get("cols", {}).get(col, {}), rec, stats_value, stats_value
-            ):
-                by_stats += 1
-                continue
-            if not bloom_keeps(rel):
-                by_bloom += 1
-                continue
-            keep.append(rel)
-        report = {
-            "files_total": len(stats["files"]),
-            "files_read": len(keep),
-            "files_skipped": len(stats["files"]) - len(keep),
-            "skipped_by_stats": by_stats,
-            "skipped_by_bloom": by_bloom,
-        }
-        pred = F.col(col) == F.lit(value).cast(dtype)
-        if not keep:
-            return self.read(table, version=v).where(F.lit(False)), report
-        df = self._read_rels(table, entry, keep).where(pred)
-        return df, report
+        return self.read_in(table, col, [value], version=v)
 
     def read_in(
         self,
@@ -2971,101 +2830,73 @@ class TableStore(TableFormat):
     ) -> tuple[DataFrame, dict]:
         """Batched IN-list point lookup (Delta's IN-list data-skipping
         analog): rows where ``col`` equals ANY of ``values``, file-pruned
-        by the same stats+bloom machinery as :meth:`read_point` — a file
-        is read only if at least one value's interval test AND bloom
-        membership keep it. The shape GDPR erasure audits and dedup-key
-        batches need: probing N subject ids costs ONE tiny Spark job for
-        all N probe hashes plus a driver-side bitmap walk, never N scans.
+        by the shared stats+bloom key probe (:meth:`_in_candidates_multi`)
+        — a file is read only if at least one value's interval test AND
+        bloom membership keep it. The shape GDPR erasure audits and
+        dedup-key batches need: probing N subject ids costs ONE tiny Spark
+        job for all N probe hashes plus an in-process bitmap walk, never N
+        scans.
 
         ``col`` may be a LIST of columns with ``values`` a list of
         same-arity tuples — the composite-key shape the reference syncs
         on ((name, company_id), sync_data.py:242-252). Composite probes
         prune with per-column stats intersected and per-column blooms
-        AND'd (see :meth:`_in_candidates_multi`), and the residual is a
-        broadcast semi-join against the key tuples — data-sized, never a
-        tuple-literal plan.
+        AND'd, and the residual is a broadcast semi-join against the key
+        tuples — data-sized, never a tuple-literal plan.
 
         Values must be non-null, mutually same-Python-type per column
         (the batch probe hashes them through one typed array; a mixed
         int/float list would silently coerce — pass floats explicitly
         instead), and at most ``max_values`` (above that a broadcast
         semi-join against a values DataFrame is the right plan, not an
-        In-list — loud error, by design). Per-value numeric/temporal
-        cast-fidelity guards are the same as read_point's: a value the
-        cast provably excludes just drops out of the probe set (reported
-        in ``values_pruned``), NaN values bypass the stats stage and
-        probe the bloom. The residual — ``col IN (...)`` over
-        column-typed literals, or the semi-join — is always applied, so
-        a bloom false positive costs one extra file scan, never a wrong
-        row."""
+        In-list — loud error, by design). A value the column-type cast
+        provably excludes just drops out of the probe set (reported in
+        ``values_pruned``); NaN values bypass the stats stage and probe
+        the bloom. The residual (:meth:`_key_residual`) is always
+        applied, so a bloom false positive costs one extra file scan,
+        never a wrong row."""
         cols = [col] if isinstance(col, str) else list(col)
-        if len(cols) == 1 and not (
-            values and isinstance(values[0], (tuple, list))
-        ):
-            entry, dtype, live, keep, report = self._in_candidates(
-                table, cols[0], values, version, num_bits, num_hashes,
-                expected_items_per_file, fpp, max_values,
-            )
-            v = entry["v"]
-            if not keep or not live:
-                return self.read(table, version=v).where(F.lit(False)), report
-            pred = F.col(cols[0]).isin(*[F.lit(lv[0]).cast(dtype) for lv in live])
-            df = self._read_rels(table, entry, keep).where(pred)
-            return df, report
         entry, dtypes, live, keep, report = self._in_candidates_multi(
             table, cols, values, version, num_bits, num_hashes,
             expected_items_per_file, fpp, max_values,
         )
-        v = entry["v"]
-        if not keep or not live:
-            return self.read(table, version=v).where(F.lit(False)), report
-        keys_df = self._keys_df(cols, dtypes, [lv[0] for lv in live])
-        df = self._read_rels(table, entry, keep).join(
-            F.broadcast(keys_df), on=cols, how="left_semi"
-        )
-        return df, report
+        if not keep:  # also when every value was pruned (no live tuple)
+            return self.read(table, version=entry["v"]).where(F.lit(False)), report
+        src = self._read_rels(table, entry, keep)
+        return self._key_residual(src, cols, dtypes, live), report
 
-    def _keys_df(self, cols: list[str], dtypes: list[str], tuples: list) -> DataFrame:
-        """Broadcast-side key frame for composite residuals: the live
-        tuples cast to the target columns' exact types (the same
-        ``lit().cast()`` coercion the single-column isin residual uses),
-        deduplicated. Join-key equality treats NaN = NaN (Spark
-        normalizes floating keys), matching the isin semantics."""
-        raw = self.spark.createDataFrame(
-            [tuple(t) for t in tuples], schema=[f"__k{j}" for j in range(len(cols))]
-        )
-        return raw.select(
-            *[
-                F.col(f"__k{j}").cast(dtypes[j]).alias(cols[j])
-                for j in range(len(cols))
-            ]
-        ).distinct()
-
-    def _in_candidates(
+    def _key_residual(
         self,
-        table: str,
-        col: str,
-        values: list,
-        version: int | None,
-        num_bits: int,
-        num_hashes: int,
-        expected_items_per_file: int | None,
-        fpp: float,
-        max_values: int,
-    ) -> tuple[dict, str, list, list, dict]:
-        """Shared single-column IN-list probe for :meth:`read_in` and
-        :meth:`delete_in`: ``(version entry, col dtype, live values,
-        candidate files, report)`` where ``live`` rows are
-        ``(value, stats_value, is_nan)``. A thin wrapper over
-        :meth:`_in_candidates_multi` with one-component tuples — the
-        composite generalization inherits every coercion guard from here
-        by construction (one shared implementation, VERDICT r8 #2)."""
-        entry, dtypes, live_t, keep, report = self._in_candidates_multi(
-            table, [col], [(x,) for x in values], version, num_bits,
-            num_hashes, expected_items_per_file, fpp, max_values,
+        df: DataFrame,
+        cols: list[str],
+        dtypes: list[str],
+        live: list,
+        anti: bool = False,
+    ) -> DataFrame:
+        """The exact key predicate over the probe's candidate files: rows
+        of ``df`` whose key equals one of the ``live`` probe tuples, or
+        with ``anti`` every OTHER row — the copy-on-write keep-set, where
+        rows with a NULL key component always survive (equality never
+        matches NULL). One column is an In-list of literals cast to the
+        column's exact type (a one-value list optimizes to plain ``=``);
+        composite keys join a broadcast frame of the tuples cast the same
+        way, deduplicated — data-sized, never a tuple-literal plan. Both
+        forms treat NaN = NaN as Spark's own equality does (In, and
+        normalized floating join keys)."""
+        tuples = [t for t, _svs, _nans in live]
+        if len(cols) == 1:
+            c = F.col(cols[0])
+            hit = c.isin(*[F.lit(t[0]).cast(dtypes[0]) for t in tuples])
+            return df.where((c.isNull() | ~hit) if anti else hit)
+        raw = self.spark.createDataFrame(
+            tuples, schema=[f"__k{j}" for j in range(len(cols))]
         )
-        live = [(t[0], svs[0], nans[0]) for t, svs, nans in live_t]
-        return entry, dtypes[0], live, keep, report
+        keys = raw.select(
+            *[F.col(f"__k{j}").cast(dtypes[j]).alias(c) for j, c in enumerate(cols)]
+        ).distinct()
+        return df.join(
+            F.broadcast(keys), on=cols, how="left_anti" if anti else "left_semi"
+        )
 
     def _in_candidates_multi(
         self,
@@ -3079,18 +2910,23 @@ class TableStore(TableFormat):
         fpp: float,
         max_values: int,
     ) -> tuple[dict, list[str], list, list, dict]:
-        """Multi-column IN-list probe (the composite-key shape the
-        reference syncs on — (name, company_id),
-        sync_data.py:242-252): ``(version entry, per-col dtypes, live
-        tuples, candidate files, report)``. ``live`` rows are
-        ``(value_tuple, stats_value_tuple, is_nan_tuple)``; a tuple with
-        ANY component the column-type cast provably excludes matches
-        nothing and drops out (same Spark-coercion rules as read_point,
-        per component). Candidate files stay conservative:
+        """THE key probe, shared by :meth:`read_point`, :meth:`read_in`,
+        :meth:`delete_in` and :meth:`merge_in` — one or more key columns,
+        scalar values or same-arity tuples (the composite-key shape the
+        reference syncs on — (name, company_id), sync_data.py:242-252).
+        Returns ``(version entry, per-col dtypes, live tuples, candidate
+        files, report)``; ``live`` rows are ``(value_tuple,
+        stats_value_tuple, is_nan_tuple)``. Each component is cast to its
+        column's own type and checked against Spark's binary-comparison
+        coercion; a tuple with ANY component the cast provably excludes
+        matches nothing and drops out (``values_pruned``). Candidate files
+        stay conservative:
 
         - **stats**: a file keeps a tuple only if EVERY component's
           interval test keeps it (AND across components — the keep-set
           is the intersection of per-column keep-sets), OR'd per tuple;
+          NaN components bypass the stats stage (parquet writers exclude
+          NaN from min/max bounds);
         - **bloom**: per-COLUMN filters AND'd across components — tuple
           membership implies each component's membership, so skipping a
           file any component's bloom rejects is sound. (Slightly weaker
@@ -3099,45 +2935,42 @@ class TableStore(TableFormat):
           shared per-column sidecars every single-column probe also
           feeds, and the always-applied residual makes the difference a
           cost, never a wrong row.) Already-built filters are always
-          consulted; an implicit build (same sizing rules as the
-          single-column probe) happens only on the LEADING column, and
-          only when stats left more than files/2 candidates (retuned
-          round 9 — below that the build cannot pay for itself; see the
-          trigger at the ``len(file_live) > files // 2`` check).
+          consulted; an implicit build (:meth:`_bloom_build`) happens
+          only on the LEADING column, and only when stats left more than
+          files/2 candidates (retuned round 9 — below that the build
+          cannot pay for itself; see the trigger at the
+          ``len(file_live) > files // 2`` check).
         """
         import datetime as _dt
         import math as _math
 
         if not values:
-            raise ValueError("read_in needs at least one value")
+            raise ValueError("key probe needs at least one value")
         if len(values) > max_values:
             raise ValueError(
-                f"read_in got {len(values)} values (max {max_values}): use a "
+                f"key probe got {len(values)} values (max {max_values}): use a "
                 "broadcast semi-join against a values DataFrame at this size"
             )
         tuples = [tuple(t) if isinstance(t, (tuple, list)) else (t,) for t in values]
         if any(len(t) != len(cols) for t in tuples):
             raise ValueError(
-                f"read_in: every value must have exactly {len(cols)} components "
-                f"for key columns {cols}"
+                f"key probe: every value must have exactly {len(cols)} "
+                f"components for key columns {cols}"
             )
         for j, c in enumerate(cols):
             comp = [t[j] for t in tuples]
             if any(x is None for x in comp):
                 raise ValueError(
-                    "read_in(values containing None): IN never matches NULL"
+                    "key probe values containing None: equality never matches NULL"
                 )
             types = {type(x) for x in comp}
             if len(types) > 1:
                 raise ValueError(
-                    f"read_in values must share one Python type per column, got "
-                    f"{sorted(t.__name__ for t in types)} for {c}"
+                    f"key probe values must share one Python type per column, "
+                    f"got {sorted(t.__name__ for t in types)} for {c}"
                 )
-        meta = self._read_meta(table)
-        v = meta["current"] if version is None else version
-        entry = next((e for e in meta["versions"] if e["v"] == v), None)
-        if entry is None:
-            raise ValueError(f"version {v} not committed (or vacuumed) for {table}")
+        entry = self._entry(table, version)
+        v = entry["v"]
         stats = self.collect_file_stats(table, cols, version=v)
         all_dtypes = {
             f.name: f.dataType.simpleString()
@@ -3185,12 +3018,27 @@ class TableStore(TableFormat):
             dead = False
             for j in range(nc):
                 val, cv, dtype = t[j], cvs[j], dtypes[j]
+                # the probe hashes CAST(value AS coltype), so a value the
+                # cast cannot represent must never match its truncation:
+                # uncastable -> loud error
                 if cv is None:
                     raise CowContractError(
-                        f"read_in value {val!r} is not castable to "
+                        f"key probe value {val!r} is not castable to "
                         f"{cols[j]}'s type {dtype}"
                     )
                 is_nan = isinstance(val, float) and _math.isnan(val)
+                # Which lossy casts mean "no row can match"? Mirror Spark's
+                # binary-comparison coercion (verified by tests):
+                # - DOUBLE column: Spark widens ANY numeric literal to
+                #   double == exactly our cast, so the cast value is what
+                #   Spark compares (ADVICE r7: includes NaN, where NaN = NaN
+                #   is TRUE, and 2**53+1, which matches its rounding);
+                # - FLOAT column + int literal: the common type is FLOAT,
+                #   the literal casts like ours — flow through rounded;
+                # - FLOAT column + float literal, integral/decimal column:
+                #   Spark widens the COLUMN, so a value the cast changes
+                #   equals no stored value — dropped (NaN survives a float
+                #   cast and matches stored NaN).
                 cast_is_sparks = dtype == "double" or (
                     dtype == "float"
                     and (is_nan or (isinstance(val, int) and not isinstance(val, bool)))
@@ -3202,6 +3050,9 @@ class TableStore(TableFormat):
                     and isinstance(cv, (int, float))
                     and cv != val
                 )
+                # same hazard for a timestamp against a DATE column: the
+                # cast drops the time of day, but Spark widens the column,
+                # so a non-midnight timestamp never equals a DATE value
                 lossy_temporal = (
                     isinstance(val, _dt.datetime)
                     and isinstance(cv, _dt.date)
@@ -3211,6 +3062,10 @@ class TableStore(TableFormat):
                 if lossy_numeric or lossy_temporal:
                     dead = True  # this component provably matches nothing
                     break
+                # where the cast IS Spark's comparison, the stats interval
+                # test must use the cast image too (Python compares
+                # int/float exactly: raw 2**53+1 sits above a file whose
+                # max is the stored 2**53 Spark's rounded literal matches)
                 svs.append(cv if cast_is_sparks else val)
                 nans.append(is_nan)
             if dead:
@@ -3252,28 +3107,16 @@ class TableStore(TableFormat):
         # maybe shave a handful of ~2M-row file rewrites; the same merge
         # with the build skipped runs in a few seconds. Callers that will
         # probe one version repeatedly should collect_file_blooms
-        # explicitly — an existing sidecar is always consulted.
+        # explicitly (read_point does) — an existing sidecar is always
+        # consulted.
         blooms: dict[int, dict] = {}
         if live and file_live:
-            bp = self._bloom_path(table, v)
             for j, c in enumerate(cols):
-                b = self._bloom_mem_get(table, v, c)
-                if b is None and self.commit.io_exists(bp):
-                    b = self._bloom_load(bp, c)
-                    if b is not None:
-                        self._bloom_mem_put(table, v, c, b)
+                b = self._bloom_cached(table, v, c)
                 if b is not None:
                     blooms[j] = b
             if not blooms and len(file_live) > max(1, len(stats["files"]) // 2):
-                # adopt the sizing already stored in a candidate sidecar
-                # (own versions; clone source) so the copy-forward
-                # engages — a freshly-derived sizing can never match the
-                # stored rows and forces an O(table) re-hash
-                stored = self._stored_bloom_sizing(table, meta, cols[0])
-                if stored is not None:
-                    num_bits, num_hashes = stored
-                    expected_items_per_file = None
-                elif expected_items_per_file is None:
+                if expected_items_per_file is None:
                     # size the implicit build from the table itself — the
                     # fixed default saturates at high distinct-per-file
                     total_rows = sum(
@@ -3283,15 +3126,10 @@ class TableStore(TableFormat):
                         expected_items_per_file = max(
                             1, total_rows // len(stats["files"])
                         )
-                blooms[0] = self.collect_file_blooms(
-                    table,
-                    [cols[0]],
-                    version=v,
-                    num_bits=num_bits,
-                    num_hashes=num_hashes,
-                    expected_items_per_file=expected_items_per_file,
-                    fpp=fpp,
-                )["cols"][cols[0]]
+                blooms[0] = self._bloom_build(
+                    table, v, cols[0], num_bits, num_hashes,
+                    expected_items_per_file, fpp,
+                )
 
         keep, by_bloom = [], 0
         if not blooms:
@@ -3299,7 +3137,9 @@ class TableStore(TableFormat):
         else:
             # job 2: bloom positions for the live tuples, each consulted
             # column hashed with ITS OWN filter's m/k — indexed by
-            # posexplode like job 1, never by collect order
+            # posexplode like job 1, never by collect order. xxhash64 is
+            # type-sensitive (int32 and int64 hash differently), so the
+            # probe hashes the column-typed cast exactly as the build did
             live_array = F.array(
                 *[
                     F.struct(*[F.lit(t[j]).alias(f"c{j}") for j in range(nc)])
@@ -3326,7 +3166,7 @@ class TableStore(TableFormat):
             def bloom_keeps(b: dict, rel: str, pos: list[int]) -> bool:
                 words = b["files"].get(rel)
                 if words is None:
-                    return True
+                    return True  # no filter for this file — conservative
                 for p in pos:
                     w = int.from_bytes(words[(p >> 6) * 8 : (p >> 6) * 8 + 8], "little")
                     if not (w >> (p & 63)) & 1:
@@ -3671,16 +3511,17 @@ class TableStore(TableFormat):
         """File-level copy-on-write DELETE (the Delta ``DELETE WHERE col
         IN (...)`` shape): remove every row whose ``col`` equals any of
         ``values`` by rewriting ONLY the files that might contain one —
-        found with the same stats+bloom pruning as :meth:`read_in` — and
-        HARD-LINKING every untouched file into the new version (same
-        inode, zero data movement; vacuum of either version later unlinks
-        only its own directory entry). At 100 TB this is the difference
+        found with the same stats+bloom key probe as :meth:`read_in` — and
+        listing every untouched file in the new version's manifest BY
+        REFERENCE (round 10, :meth:`_cow_commit`: zero bytes moved, zero
+        copy requests; vacuum reclaims a file only when no surviving
+        version references it). At 100 TB this is the difference
         between rewriting the table and rewriting the handful of files a
         GDPR subject actually lives in. A bloom false positive rewrites a
         clean file unchanged — cost, never a wrong row. Rows with NULL in
         any key column are always kept (IN never matches NULL), and a NaN
-        value deletes NaN rows (Spark NaN = NaN, in both the isin residual
-        and join-key equality).
+        value deletes NaN rows (Spark NaN = NaN, in both the In-list
+        residual and join-key equality — :meth:`_key_residual`).
 
         ``col`` may be a LIST of columns with ``values`` same-arity tuples
         — the composite-key shape the reference deletes on
@@ -3689,7 +3530,7 @@ class TableStore(TableFormat):
         :meth:`_in_candidates_multi`), and the doomed-row test is a
         broadcast anti-join against the key tuples — data-sized, never a
         tuple-literal plan. Hive-partitioned layouts (``company_id=…``
-        dirs) are first-class: untouched partition files hard-link at
+        dirs) are first-class: untouched partition files are referenced at
         their partition paths and rewritten rows land back in their own
         partition dirs (round 9; previously a loud error).
 
@@ -3756,10 +3597,8 @@ class TableStore(TableFormat):
                     break
         rewrite = [rel for rel in affected if rel not in set(dropped)]
         version = self._claim_version(table)
-        # one Spark job rewrites the affected files minus the doomed rows;
-        # kept = NULL key (IN never matches NULL) or not-IN. Composite keys
-        # keep via a broadcast ANTI-join (NULL components never match, so
-        # they survive — same NULL contract as the isin form).
+        # one Spark job rewrites the affected files minus the doomed rows
+        # (the anti key residual: NULL keys and non-matching keys survive)
         from pyspark.sql import Observation
 
         kept = None
@@ -3767,14 +3606,7 @@ class TableStore(TableFormat):
         obs = None
         if rewrite:
             src = self._read_rels(table, entry, rewrite)
-            if len(cols) == 1:
-                in_vals = F.col(cols[0]).isin(
-                    *[F.lit(lv[0][0]).cast(dtypes[0]) for lv in live]
-                )
-                kept = src.where(F.col(cols[0]).isNull() | ~in_vals)
-            else:
-                keys_df = self._keys_df(cols, dtypes, [lv[0] for lv in live])
-                kept = src.join(F.broadcast(keys_df), on=cols, how="left_anti")
+            kept = self._key_residual(src, cols, dtypes, live, anti=True)
             obs = Observation(f"delete_in_{table}_{version}")
             kept = kept.observe(obs, F.count(F.lit(1)).alias("kept_rows"))
         moved = self._cow_commit(table, entry, all_rels, affected, kept, version)
@@ -3808,11 +3640,12 @@ class TableStore(TableFormat):
         the files whose stats interval intersects the range — the same
         conservative :meth:`_stat_keeps` test read_pruned prunes with, so
         every type hazard (temporal strings, mixed bound types, NaN) is
-        inherited, not re-derived — and hard-linking the rest into the
-        new version. The tenant/date-scoped retention sweep; Hive-
-        partitioned layouts are first-class (round 9) — untouched
-        partition files link at their partition paths, rewrites land back
-        in their partition dirs (:class:`PartitionedTable`'s scoped swap
+        inherited, not re-derived — and listing the rest in the new
+        version's manifest by reference (round 10). The tenant/date-scoped
+        retention sweep; Hive-partitioned layouts are first-class (round
+        9) — untouched partition files are referenced at their partition
+        paths, rewrites land back in their partition dirs
+        (:class:`PartitionedTable`'s scoped swap
         remains the better plan when the predicate IS the partition
         column, since stats for partition columns live in dir names, not
         footers, and this path conservatively rewrites). Rows with NULL ``col``
@@ -3842,11 +3675,8 @@ class TableStore(TableFormat):
                 "delete_where with both bounds open would truncate the table; "
                 "write an empty DataFrame explicitly if that is intended"
             )
-        meta = self._read_meta(table)
-        v = meta["current"]
-        entry = next((e for e in meta["versions"] if e["v"] == v), None)
-        if entry is None:
-            raise ValueError(f"no current version for {table}")
+        entry = self._entry(table)
+        v = entry["v"]
         stats = self.collect_file_stats(table, [col], version=v)
         all_rels = list(stats["files"])
         dtype = dict(self.read(table, version=v).dtypes).get(col)
@@ -3927,15 +3757,16 @@ class TableStore(TableFormat):
     ) -> tuple[int, dict]:
         """File-level copy-on-write MERGE (the Delta MERGE fast path for a
         SMALL update batch): the update keys locate the files that might
-        hold a matching row (same stats+bloom probe as :meth:`read_in`),
-        ONLY those files are rewritten — their non-matching rows kept,
-        every update row unioned in — and every untouched file HARD-LINKS
-        into the new version. Result rows are exactly
+        hold a matching row (same stats+bloom key probe as
+        :meth:`read_in`), ONLY those files are rewritten — their
+        non-matching rows kept, every update row unioned in — and every
+        untouched file is listed in the new version's manifest BY
+        REFERENCE (round 10). Result rows are exactly
         ``merge_upsert(target, updates, key_cols)`` (updates win, target
         rows without a match survive, update rows with no match insert) —
         pinned by test — but a 100-row update batch rewrites the 1-2
         files its keys live in, not the table. Update keys whose keyspace
-        is entirely new touch nothing: every old file links through and
+        is entirely new touch nothing: every old file is referenced and
         the batch lands as pure new part files (an append).
 
         ``key_col`` may be a LIST — the composite-key shape the reference
@@ -3943,8 +3774,8 @@ class TableStore(TableFormat):
         intersects per-column stats / ANDs per-column blooms
         (:meth:`_in_candidates_multi`) and matched target rows are found
         by a broadcast ANTI-join against the key tuples. Hive-partitioned
-        layouts are first-class (round 9): untouched partition files link
-        at their partition paths and the rewrite job writes back
+        layouts are first-class (round 9): untouched partition files are
+        referenced at their partition paths and the rewrite job writes back
         ``partitionBy`` the layout's own partition columns — updates land
         in their correct partition dirs.
 
@@ -3979,12 +3810,7 @@ class TableStore(TableFormat):
         # committed add_columns vanished with no ConcurrentWriteError
         # anywhere, r12). With the single snapshot, any commit that lands
         # after it — ALTER or data — fails expect_base and retries.
-        meta0 = self._read_meta(table)
-        entry0 = next(
-            (e for e in meta0["versions"] if e["v"] == meta0["current"]), None
-        )
-        if entry0 is None:
-            raise ValueError(f"merge_in: {table} has no current version")
+        entry0 = self._entry(table)
         if self._load_manifest(table, entry0) is not None:
             fm0 = self._version_filemap(table, entry0)
             _target = self._read_rels(table, entry0, list(fm0), fm0)
@@ -4033,7 +3859,7 @@ class TableStore(TableFormat):
 
         # cast updates to the TARGET's exact column types (snapshot taken
         # above, same read as target_cols): the new part files must carry
-        # the same parquet physical types as the hard-linked ones (a
+        # the same parquet physical types as the referenced ones (a
         # bigint target updated from an int batch would otherwise produce
         # a mixed-type version that reads wrongly under the single-footer
         # schema)
@@ -4043,14 +3869,7 @@ class TableStore(TableFormat):
         )
         if affected and live:
             src = self._read_rels(table, entry, affected)
-            if len(key_cols) == 1:
-                in_keys = F.col(key_cols[0]).isin(
-                    *[F.lit(lv[0][0]).cast(dtypes[0]) for lv in live]
-                )
-                kept = src.where(F.col(key_cols[0]).isNull() | ~in_keys)
-            else:
-                keys_df = self._keys_df(key_cols, dtypes, [lv[0] for lv in live])
-                kept = src.join(F.broadcast(keys_df), on=key_cols, how="left_anti")
+            kept = self._key_residual(src, key_cols, dtypes, live, anti=True)
             # evolution: kept rows (pre-evolution files) read NULL for the
             # new columns — allowMissingColumns pads exactly those
             out = kept.unionByName(up, allowMissingColumns=bool(new_cols))
@@ -4152,11 +3971,7 @@ class TableStore(TableFormat):
         cannot answer size without re-downloading reports ``bytes=None``
         honestly instead of paying a second full read of the table
         (ADVICE r11 low)."""
-        meta = self._read_meta(table)
-        v = meta["current"] if version is None else version
-        entry = next((e for e in meta["versions"] if e["v"] == v), None)
-        if entry is None:
-            raise ValueError(f"version {v} not committed (or vacuumed) for {table}")
+        entry = self._entry(table, version)
         if self.commit.io_exists(dest):
             raise ValueError(f"materialize_version: {dest} already exists")
         fm = self._version_filemap(table, entry)
@@ -4269,8 +4084,7 @@ class TableStore(TableFormat):
         literal). Delta ``ALTER TABLE ADD COLUMNS`` analog."""
         from pyspark.sql.types import StructField, StructType
 
-        meta = self._read_meta(table)
-        entry = next(e for e in meta["versions"] if e["v"] == meta["current"])
+        entry = self._entry(table)
         schema = self._recorded_schema(table, entry) or self._version_schema(
             table, entry
         )
@@ -4311,8 +4125,7 @@ class TableStore(TableFormat):
         whole schema."""
         import re as _re
 
-        meta = self._read_meta(table)
-        entry = next(e for e in meta["versions"] if e["v"] == meta["current"])
+        entry = self._entry(table)
         schema = self._recorded_schema(table, entry) or self._version_schema(
             table, entry
         )
@@ -4375,8 +4188,7 @@ class TableStore(TableFormat):
 
         from pyspark.sql.types import StructField, StructType
 
-        meta = self._read_meta(table)
-        entry = next(e for e in meta["versions"] if e["v"] == meta["current"])
+        entry = self._entry(table)
         schema = self._recorded_schema(table, entry) or self._version_schema(
             table, entry
         )
@@ -4466,8 +4278,7 @@ class TableStore(TableFormat):
         working — widening preserves every value they test."""
         from pyspark.sql.types import StructField, StructType
 
-        meta = self._read_meta(table)
-        entry = next(e for e in meta["versions"] if e["v"] == meta["current"])
+        entry = self._entry(table)
         schema = self._recorded_schema(table, entry) or self._version_schema(
             table, entry
         )
@@ -4551,8 +4362,7 @@ class TableStore(TableFormat):
         at least one non-partition column must remain (``partitionBy``
         strips spec columns from file payloads); ``[]`` evolves to an
         unpartitioned layout for future writes."""
-        meta = self._read_meta(table)
-        entry = next(e for e in meta["versions"] if e["v"] == meta["current"])
+        entry = self._entry(table)
         schema = self._recorded_schema(table, entry) or self._version_schema(
             table, entry
         )
@@ -4631,22 +4441,14 @@ class TableStore(TableFormat):
         (size ``min_age_seconds`` above clone latency to exclude it);
         clones of clones are refused (depth-1 keeps resolution and
         vacuum refcounting one hop — compact the clone first)."""
-        meta = self._read_meta(src)
-        if meta["current"] is None:
-            raise ValueError(f"clone: source table {src!r} has no current version")
+        entry = self._entry(src, version)
         if self._clone_info(src) is not None:
             raise ValueError(
                 f"clone: {src!r} is itself a shallow clone — compact it "
                 "first (clone chains are refused to keep reference "
                 "resolution and vacuum refcounting one hop deep)"
             )
-        pin = meta["current"] if version is None else version
-        entry = next((e for e in meta["versions"] if e["v"] == pin), None)
-        if entry is None:
-            raise ValueError(
-                f"clone: version {pin} not committed (or vacuumed) for {src!r}"
-            )
-        base = max(e["v"] for e in meta["versions"])
+        base = max(e["v"] for e in self._read_meta(src)["versions"])
         dmeta = self._read_meta(dst)
         if dmeta["versions"] or dmeta["current"] is not None:
             raise ValueError(f"clone: destination table {dst!r} already exists")

@@ -2280,6 +2280,10 @@ def test_tablestore_read_point_fuzz_equals_full_scan(spark, tmp_path, seed):
         g = sorted(r.payload for r in got.collect())
         w = sorted(r.payload for r in want.collect())
         assert g == w, f"seed {seed} col {col} probe {probe!r} rep {rep}"
+        # read_point is the one-value read_in: same probe, same rows
+        got_in, rep_in = store.read_in("t", col, [probe])
+        g_in = sorted(r.payload for r in got_in.collect())
+        assert g_in == g, f"seed {seed} col {col} probe {probe!r} rep {rep_in}"
 
 
 def test_read_point_cast_fidelity_guards(spark, tmp_path):
@@ -2311,6 +2315,31 @@ def test_read_point_cast_fidelity_guards(spark, tmp_path):
 
     with pytest.raises(ValueError, match="not castable"):
         store.read_point("t", "d", "definitely-not-a-date")
+
+
+@pytest.mark.parametrize(
+    "method, args",
+    [
+        ("compact", ()),
+        ("optimize_layout", (["k"],)),
+        ("optimize_layout_zorder", ({"k": (0.0, 1.0)},)),
+        ("current_partition_columns", ()),
+        ("add_columns", ({"c": "int"},)),
+        ("drop_columns", (["k"],)),
+        ("rename_columns", ({"k": "k2"},)),
+        ("alter_column_type", ({"k": "bigint"},)),
+        ("alter_partition_spec", (["k"],)),
+    ],
+)
+def test_tablestore_missing_table_raises_value_error(spark, tmp_path, method, args):
+    """Every method that resolves the current version raises the
+    documented ValueError on a table with no current version — never a
+    bare StopIteration from an unguarded version lookup."""
+    from taico_data_integration_spark.ops.incremental import TableStore
+
+    store = TableStore(spark, str(tmp_path))
+    with pytest.raises(ValueError, match="no current version for nope"):
+        getattr(store, method)("nope", *args)
 
 
 def test_bloom_and_stats_manifests_across_version_lifecycle(spark, tmp_path):
