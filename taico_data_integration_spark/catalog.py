@@ -123,42 +123,53 @@ def normalize_event_ts(df: DataFrame, col: str = "ts", dtype: str | None = None)
 
 _SCAN_PARALLELIZE_MIN_BYTES = 256 * 1024  # below this, single-task compute is trivial
 
-_scan_stats_cache: dict[tuple[str, int], tuple[int, int] | None] = {}
-
-
-def _local_scan_stats(path: str) -> tuple[int, int] | None:
-    """(n_files, total_bytes) for a local parquet file/dir; None when the
-    path is not local-filesystem-resolvable (object stores: stay untouched,
-    those deployments size their files at write time)."""
+def _mtime_memo(cache: dict, path: str, compute):
+    """Path-keyed metadata memo: ``cache[path] = (mtime, value)``, with
+    ``compute(local_path)`` re-run and the entry OVERWRITTEN when the
+    path's mtime changes — a fixture rewritten at the same path within one
+    process re-derives (ADVICE r12 #3: stale scan stats could silently flip
+    the fan-out decision in long-lived sessions) and the stale entry is
+    dropped, not leaked. The mtime is the TOP-LEVEL one: parquet writers
+    create/delete files directly in a table dir, which touches it, but an
+    in-place rewrite of a SUBDIRECTORY (a partition dir) does not, and
+    keeps serving the old value. None, uncached, when the path is not
+    local-filesystem-resolvable."""
     p = path[7:] if path.startswith("file://") else path
-    # Cache key includes the path's mtime so a fixture rewritten at the same
-    # path within one process re-derives its stats (ADVICE r12 #3 — stale
-    # stats could silently flip the fan-out decision in long-lived sessions).
     try:
         mtime = os.stat(p).st_mtime_ns
     except OSError:
-        mtime = -1
-    cache_key = (path, mtime)
-    if cache_key in _scan_stats_cache:
-        return _scan_stats_cache[cache_key]
-    stats: tuple[int, int] | None
+        return None
+    hit = cache.get(path)
+    if hit is None or hit[0] != mtime:
+        hit = cache[path] = (mtime, compute(p))
+    return hit[1]
+
+
+_scan_stats_cache: dict[str, tuple[int, tuple[int, int] | None]] = {}
+
+
+def _scan_stats(p: str) -> tuple[int, int] | None:
     try:
         if os.path.isfile(p):
-            stats = (1, os.path.getsize(p))
-        elif os.path.isdir(p):
+            return (1, os.path.getsize(p))
+        if os.path.isdir(p):
             files = [
                 os.path.join(root, f)
                 for root, _dirs, fs in os.walk(p)
                 for f in fs
                 if not f.startswith((".", "_"))
             ]
-            stats = (len(files), sum(os.path.getsize(f) for f in files))
-        else:
-            stats = None
+            return (len(files), sum(os.path.getsize(f) for f in files))
     except OSError:
-        stats = None
-    _scan_stats_cache[cache_key] = stats
-    return stats
+        pass
+    return None
+
+
+def _local_scan_stats(path: str) -> tuple[int, int] | None:
+    """(n_files, total_bytes) for a local parquet file/dir; None when the
+    path is not local-filesystem-resolvable (object stores: stay untouched,
+    those deployments size their files at write time)."""
+    return _mtime_memo(_scan_stats_cache, path, _scan_stats)
 
 
 def _maybe_parallelize_scan(
@@ -208,7 +219,7 @@ _FAN_OUT_KEYS: dict[str, tuple[str, ...]] = {
 }
 
 
-# Schema cache for repeated loads of the same (path, mtime): plain
+# Schema cache for repeated loads of the same path (see _mtime_memo): plain
 # spark.read.parquet() re-infers the schema on EVERY call (footer read +
 # file-index setup, measured 0.10-0.17 s per call on the driver even for a
 # 4-row nation table), and a bench pass loads fixture tables dozens of
@@ -216,24 +227,16 @@ _FAN_OUT_KEYS: dict[str, tuple[str, ...]] = {
 # inference (0.02 s) while still returning a FRESH relation per call (new
 # attribute ids — no self-join ambiguity, unlike caching the DataFrame
 # handle). This caches metadata only, exactly what a catalog/metastore
-# does — every query still scans the parquet data. mtime key: a fixture
-# rewritten at the same path re-infers (parquet writers create/delete files,
-# which touches the directory mtime).
-_schema_cache: dict[tuple[str, int], object] = {}
+# does — every query still scans the parquet data. A fixture rewritten at
+# the same path re-infers; a non-local path returns None and the reader
+# infers.
+_schema_cache: dict[str, tuple[int, object]] = {}
 
 
 def _cached_schema(spark: SparkSession, path: str):
-    p = path[7:] if path.startswith("file://") else path
-    try:
-        mtime = os.stat(p).st_mtime_ns
-    except OSError:
-        return None  # non-local path: let the reader infer
-    key = (path, mtime)
-    sch = _schema_cache.get(key)
-    if sch is None:
-        sch = spark.read.parquet(path).schema
-        _schema_cache[key] = sch
-    return sch
+    return _mtime_memo(
+        _schema_cache, path, lambda _p: spark.read.parquet(path).schema
+    )
 
 
 def load_table(

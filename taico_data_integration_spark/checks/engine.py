@@ -114,19 +114,21 @@ def suite_from_spec(spec: list[dict]) -> list[Check]:
     return out
 
 
-def run_checks(df: DataFrame, checks: list[Check]) -> list[dict]:
-    """Execute all row-level checks in ONE job; returns per-check results."""
-    aggs, compiled = compile_metrics(df, checks)
-    row = df.agg(*aggs).collect()[0].asDict()
+def _verdicts(row, compiled: list[Check]) -> list[dict]:
+    """Per-check results from one row of compiled metrics: ``min_rows``
+    passes at ``metric >= n``, every other kind at ``metric == 0``."""
     results = []
     for i, ch in enumerate(compiled):
         metric = row[f"__m{i}"]
-        if ch.kind == "min_rows":
-            ok = metric >= ch.params["n"]
-        else:
-            ok = metric == 0
+        ok = metric >= ch.params["n"] if ch.kind == "min_rows" else metric == 0
         results.append({"name": ch.name, "kind": ch.kind, "metric": metric, "ok": bool(ok)})
     return results
+
+
+def run_checks(df: DataFrame, checks: list[Check]) -> list[dict]:
+    """Execute all row-level checks in ONE job; returns per-check results."""
+    aggs, compiled = compile_metrics(df, checks)
+    return _verdicts(df.agg(*aggs).collect()[0].asDict(), compiled)
 
 
 def attach_observed_checks(df: DataFrame, checks: list[Check], name: str = "quality"):
@@ -153,16 +155,7 @@ def attach_observed_checks(df: DataFrame, checks: list[Check], name: str = "qual
     observed = df.observe(obs, *aggs)
 
     def evaluate() -> list[dict]:
-        row = obs.get
-        results = []
-        for i, ch in enumerate(compiled):
-            metric = row[f"__m{i}"]
-            if ch.kind == "min_rows":
-                ok = metric >= ch.params["n"]
-            else:
-                ok = metric == 0
-            results.append({"name": ch.name, "kind": ch.kind, "metric": metric, "ok": bool(ok)})
-        return results
+        return _verdicts(obs.get, compiled)
 
     return observed, evaluate
 

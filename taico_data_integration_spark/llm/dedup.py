@@ -374,7 +374,12 @@ def connected_components(
     otherwise they fall back to executor-local ``localCheckpoint()`` (the
     single-node/test default). The label-propagation fixpoint equals the
     exact transitive closure, which the DuckDB oracle computes with a
-    recursive CTE — parity holds only at convergence, hence the assertion."""
+    recursive CTE — parity holds only at convergence, hence the assertion.
+
+    ``small_graph_max_edges`` caps the RAW pair rows of ``pairs`` — before
+    any distinct or symmetrization, so duplicate or mirrored pairs count
+    against it — at or below which the graph is solved by union-find on
+    the driver; 0 always runs the distributed loop."""
 
     def ckpt(df: DataFrame, eager: bool = True) -> DataFrame:
         # Reliable-path storage growth: each iteration writes one (narrow)

@@ -12,11 +12,10 @@ fast path automatically: when the store declares ``cow-mutations`` (see
 ``formats.CAPABILITY_METHODS``) and the subject set is small enough to
 collect, each table goes through ``TableStore.delete_in`` — composite
 keys and Hive-partitioned layouts included — so only the files the
-subjects actually live in rewrite and everything else hard-links into
-the new version. At 100 TB that is the difference between rewriting the
+subjects actually live in rewrite and everything else is kept by
+manifest reference in the new version. At 100 TB that is the difference between rewriting the
 table and rewriting a handful of files. Oversized subject sets, stores
-without the capability, and contract misses (non-Hive nested layouts,
-uncastable keys) fall back transparently to the general path: one
+without the capability, and contract misses (uncastable keys) fall back transparently to the general path: one
 left-anti join against the (small, broadcast) key set, full rewrite.
 Results are identical either way (delete_in == the anti-join filter,
 pinned by fuzz in test_ops); the per-table report records which path ran.
@@ -92,8 +91,8 @@ def erase_subjects(
                     max_values=max_fast_keys,
                 )
             except CowContractError:
-                # documented contract miss (non-Hive layout, uncastable
-                # key): full rewrite below. Plain ValueErrors (wrong
+                # documented contract miss (an uncastable key): full
+                # rewrite below. Plain ValueErrors (wrong
                 # column name in table_key_cols, arity mismatch) are
                 # programming errors and PROPAGATE (ADVICE r9 — the old
                 # blanket except masked them and leaked a claimed version

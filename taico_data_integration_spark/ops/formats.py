@@ -250,8 +250,8 @@ class SqlWarehouseFormat(TableFormat):
       catalog table's scan, and parquet footer min/max skipping happens
       inside Spark's own scan, so a hand-rolled sidecar here would
       duplicate the engine with no added pruning.
-    - ``cow-mutations``: file-level surgery (hard-link untouched files,
-      rewrite the rest) requires owning the physical files; saveAsTable
+    - ``cow-mutations``: file-level surgery (keep untouched files by
+      reference, rewrite the rest) requires owning the physical files; saveAsTable
       semantics rewrite whole tables. The equivalent plan on this format
       is ``write(t, merge_upsert(...))`` — a new catalog version.
     - ``txn-exactly-once`` / ``check-constraints``: the bookkeeping rides

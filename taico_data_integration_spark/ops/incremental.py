@@ -40,9 +40,8 @@ class ConcurrentWriteError(RuntimeError):
 
 class CowContractError(ValueError):
     """The file-level copy-on-write fast path cannot serve this table /
-    key set for a DOCUMENTED contract reason — a non-Hive nested layout,
-    inconsistent partition nesting, or a key value that does not cast to
-    its column's type. Callers with a general fallback (e.g.
+    key set for a DOCUMENTED contract reason — a key value that does not
+    cast to its column's type. Callers with a general fallback (e.g.
     ``deletion.erase_subjects``'s broadcast-anti-join full rewrite) catch
     exactly this class; plain ``ValueError``s from the same surfaces
     (wrong column name, arity mismatch, NULL keys) are programming errors
@@ -203,10 +202,10 @@ class TableStore(TableFormat):
     protocol methods — promote_with_validation, diff, exists — are inherited
     from the seam and shared with SqlWarehouseFormat).
 
-    Layout: root/<table>/v<NNN>/ parquet + root/<table>/_ptr/ holding
-    the current-version POINTER log only (pre-r10 stores' ``_meta.json``
-    reads transparently and migrates on first swap). write() creates a
-    new version; rollback() repoints. Cheap O(1) metadata swap, like
+    Layout: root/<table>/v<NNN>/ parquet + ``_MANIFEST.json`` (the
+    version's file list, schema and partition spec) + root/<table>/_ptr/
+    holding the current-version POINTER log only. write() creates a new
+    version; rollback() repoints. Cheap O(1) metadata swap, like
     Delta's log commit.
 
     Concurrent-writer contract (VERDICT r4 #6) — optimistic, Delta-style:
@@ -239,7 +238,7 @@ class TableStore(TableFormat):
       retries. The check rides the pointer CAS loop on BOTH commit
       impls (round 10 — the put-if-absent log is the one pointer
       implementation, O_EXCL on POSIX), so it is linearizable
-      everywhere; the pre-r10 POSIX check-then-replace window is gone.
+      everywhere.
       Tested boundary (tests/
       test_ops.py): the two-writer race on one table runs BOTH as threads
       in one interpreter AND as two real OS processes each with its own
@@ -251,9 +250,9 @@ class TableStore(TableFormat):
     :mod:`.storage_commit`): the protocol's four primitives — version
     claim, all-or-nothing version publish, unchanged-file sharing, and
     the pointer swap — route through ``self.commit``. The default
-    :class:`~.storage_commit.PosixCommit` is the original behavior
-    (O_EXCL claims, atomic directory rename, hard links, replace'd
-    pointer) and needs POSIX/HDFS semantics on the shared filesystem.
+    :class:`~.storage_commit.PosixCommit` runs it on POSIX/HDFS
+    semantics (O_EXCL claims and pointer-log entries, atomic directory
+    rename; unchanged files are shared by manifest reference).
     :class:`~.storage_commit.ConditionalPutCommit` runs the SAME
     protocol on object-store semantics (conditional PUT-if-absent,
     atomic single-object PUT, server-side COPY, untrusted LIST): no
@@ -409,12 +408,12 @@ class TableStore(TableFormat):
     # References always point at the PHYSICAL holder, never at another
     # reference — _cow_commit composes them from the base version's
     # filemap, which is already resolved, so chains stay depth-1 no
-    # matter how many COW mutations stack. Versions WITHOUT a manifest
-    # (pre-r10 stores) mean "every parquet file under my directory is
-    # mine", exactly the old layout. ``schema`` is recorded so a version
-    # whose file list is EMPTY (a delete that doomed every row,
-    # ADVICE r9) stays readable as an empty DataFrame; for non-empty
-    # versions the files themselves are authoritative.
+    # matter how many COW mutations stack. Every committed version has a
+    # manifest (a committed version without one is a corrupt store, and
+    # reads raise); only a vacuum TOMBSTONE drops its own. ``schema`` is
+    # recorded so a version whose file list is EMPTY (a delete that
+    # doomed every row, ADVICE r9) stays readable as an empty DataFrame;
+    # for non-empty versions the files themselves are authoritative.
 
     _MANIFEST_NAME = "_MANIFEST.json"
     _MANIFEST_MEM_MAX = 32
@@ -474,8 +473,10 @@ class TableStore(TableFormat):
         return out
 
     def _load_manifest(self, table: str, entry: dict) -> dict | None:
-        """The version's manifest, or None for a pre-r10 version. Cached
-        per (table, version) — manifests are immutable once committed."""
+        """The version dir's manifest, or None when it has none — the
+        case of a tombstoned holder, whose manifest vacuum deletes.
+        Cached per (table, version) — manifests are immutable once
+        committed."""
         key = (table, entry["v"])
         man = self._manifest_mem.get(key)
         if man is not None:
@@ -488,6 +489,19 @@ class TableStore(TableFormat):
         while len(self._manifest_mem) > self._MANIFEST_MEM_MAX:
             self._manifest_mem.popitem(last=False)
         return man if man else None
+
+    def _manifest(self, table: str, entry: dict) -> dict:
+        """The manifest of a COMMITTED version. Every publish path writes
+        one before the commit marker, so its absence means the store is
+        corrupt (or a racing vacuum tombstoned the version) — loud."""
+        man = self._load_manifest(table, entry)
+        if man is None:
+            raise ValueError(
+                f"version {entry['v']} of {table} is committed but has no "
+                f"{self._MANIFEST_NAME} (corrupt store, or a racing vacuum "
+                "tombstoned it)"
+            )
+        return man
 
     @staticmethod
     def _manifest_record(
@@ -590,28 +604,19 @@ class TableStore(TableFormat):
             for _kind, ev in events
         )
 
-    def _recorded_partition_by(
-        self, table: str, entry: dict
-    ) -> list[str] | None:
-        """The version's RECORDED partition spec from its manifest, or
-        None for manifest-less legacy versions (callers fall back to
-        path inference). With partition evolution (round 12) the
-        recorded spec is the CURRENT layout contract — referenced
-        generations may sit under older specs, so inferring one spec
-        from a mixed rel list is no longer meaningful."""
-        man = self._load_manifest(table, entry)
-        if man is None:
-            return None
-        return list(man.get("partition_by", []))
+    def _recorded_partition_by(self, table: str, entry: dict) -> list[str]:
+        """The version's RECORDED partition spec from its manifest. With
+        partition evolution (round 12) the recorded spec is the CURRENT
+        layout contract — referenced generations may sit under older
+        specs, so one spec cannot be inferred from a mixed rel list."""
+        return list(self._manifest(table, entry).get("partition_by", []))
 
     @staticmethod
     def _dir_partition_union(rels) -> set[str]:
         """Every Hive dir-name column appearing in ANY rel path — the
-        union across partition specs. Unlike :meth:`_partition_cols`
-        this never raises on mixed nesting: it is the guard set for
-        schema ALTERs (a column living in any generation's directory
-        names cannot be renamed/dropped/widened), not a layout
-        contract."""
+        union across partition specs: the guard set for schema ALTERs (a
+        column living in any generation's directory names cannot be
+        renamed/dropped/widened), not a layout contract."""
         cols: set[str] = set()
         for rel in rels:
             for comp in rel.split(os.sep)[:-1]:
@@ -621,46 +626,25 @@ class TableStore(TableFormat):
         return cols
 
     def _version_filemap(self, table: str, entry: dict) -> dict[str, int]:
-        """rel -> PHYSICAL version for every live file of the version;
-        legacy versions (no manifest) glob their own directory."""
-        man = self._load_manifest(table, entry)
-        if man is not None:
-            return {f["rel"]: f["v"] for f in man["files"]}
-        import glob
-
-        return {
-            os.path.relpath(p, entry["path"]): entry["v"]
-            for p in glob.glob(
-                os.path.join(entry["path"], "**", "*.parquet"), recursive=True
-            )
-        }
+        """rel -> PHYSICAL version for every live file of the version."""
+        return {f["rel"]: f["v"] for f in self._manifest(table, entry)["files"]}
 
     def _recorded_schema(self, table: str, entry: dict):
         """The manifest's RECORDED schema (with field metadata — the
         add_columns DEFAULT annotations survive here, unlike a read-back
-        schema), or None for manifest-less versions."""
-        man = self._load_manifest(table, entry) or {}
-        if man.get("schema"):
-            from pyspark.sql.types import StructType
+        schema)."""
+        from pyspark.sql.types import StructType
 
-            return StructType.fromJson(json.loads(man["schema"]))
-        return None
+        return StructType.fromJson(json.loads(self._manifest(table, entry)["schema"]))
 
     def _version_schema(self, table: str, entry: dict):
         """Read-parity schema of a version: derived from its files when
         it has any (partition columns typed exactly as a read infers
         them), from the recorded manifest schema when empty."""
-        from pyspark.sql.types import StructType
-
         fm = self._version_filemap(table, entry)
         if fm:
             return self._read_rels(table, entry, list(fm), fm).schema
-        man = self._load_manifest(table, entry) or {}
-        if man.get("schema"):
-            return StructType.fromJson(json.loads(man["schema"]))
-        raise ValueError(
-            f"version {entry['v']} of {table} has no files and no recorded schema"
-        )
+        return self._recorded_schema(table, entry)
 
     def _verified_direct_rels(self, final: str, expected_rows: int) -> list[str]:
         """Enumerate a direct-publish job's own freshly-written files and
@@ -711,16 +695,11 @@ class TableStore(TableFormat):
         groups: dict[int, list[str]] = {}
         for rel in rels:
             groups.setdefault(filemap.get(rel, entry["v"]), []).append(rel)
-        man = self._load_manifest(table, entry) or {}
-        events = self._alter_events(man)
-        rec_schema = None
-        if man.get("schema"):
-            from pyspark.sql.types import StructType
-
-            rec_schema = StructType.fromJson(json.loads(man["schema"]))
+        events = self._alter_events(self._manifest(table, entry))
+        rec_schema = self._recorded_schema(table, entry)
         defaulted = [
             f
-            for f in (rec_schema.fields if rec_schema is not None else [])
+            for f in rec_schema.fields
             if (f.metadata or {}).get(self._DEFAULT_META) is not None
         ]
         dfs = []
@@ -818,18 +797,15 @@ class TableStore(TableFormat):
             # evolve spec onto it -> compact; also reachable by a plain
             # partitioned write of an all-null column). The recorded
             # schema is the contract — restore the real type per branch.
-            if rec_schema is not None:
-                from pyspark.sql.types import NullType
+            from pyspark.sql.types import NullType
 
-                for f in rec_schema.fields:
-                    if (
-                        f.name in d.columns
-                        and isinstance(d.schema[f.name].dataType, NullType)
-                        and not isinstance(f.dataType, NullType)
-                    ):
-                        d = d.withColumn(
-                            f.name, F.col(f.name).cast(f.dataType)
-                        )
+            for f in rec_schema.fields:
+                if (
+                    f.name in d.columns
+                    and isinstance(d.schema[f.name].dataType, NullType)
+                    and not isinstance(f.dataType, NullType)
+                ):
+                    d = d.withColumn(f.name, F.col(f.name).cast(f.dataType))
             # add_columns DEFAULT back-fill is PER GENERATION: a branch
             # predating the add reads the literal — padding after the
             # union would be too late (allowMissingColumns pads NULL)
@@ -858,13 +834,11 @@ class TableStore(TableFormat):
         cols0 = set(dfs[0].columns)
         hetero = any(set(d.columns) != cols0 for d in dfs[1:])
         union_cols = set().union(*(set(d.columns) for d in dfs))
-        evolved = hetero or (
-            rec_schema is not None and set(rec_schema.names) != union_cols
-        )
+        evolved = hetero or set(rec_schema.names) != union_cols
         df = dfs[0]
         for d in dfs[1:]:
             df = df.unionByName(d, allowMissingColumns=evolved)
-        if evolved and rec_schema is not None:
+        if evolved:
             for f in rec_schema.fields:
                 if f.name not in df.columns:
                     # add_columns DEFAULT back-fill (field metadata);
@@ -1098,37 +1072,11 @@ class TableStore(TableFormat):
 
         return f"{safe}-{hashlib.sha256(raw.encode()).hexdigest()[:8]}"
 
-    @classmethod
-    def _legacy_safe_name(cls, raw: str) -> str | None:
-        """Pre-r8 filesystem image of ``raw``, when it differs from the
-        current one: names that were already filesystem-safe used to map
-        to THEMSELVES even when they match the digest-suffix pattern
-        (``-hhhhhhhh$`` — 8-digit date suffixes like 'etl-20260815'
-        qualify), which r8's second-preimage fix now suffixes (ADVICE r8:
-        without a legacy probe, such stores' txn sidecars and constraint
-        files silently go invisible — drop_constraint can't remove them
-        and last_txn loses its sidecar fallback). Returns None when the
-        current image is the identity (no legacy split exists)."""
-        safe = re.sub(r"[^A-Za-z0-9_.-]", "_", raw)
-        return raw if safe == raw and cls._fs_safe_name(raw) != raw else None
-
     def _txn_sidecar(self, table: str, app_id: str) -> str:
-        """Per-app txn sidecar path — migrating any pre-r8 legacy-named
-        sidecar (identity filename) to the current digest-suffixed name
-        first, so stores written before the r8 rename keep their
-        belt-and-braces fallback reachable."""
-        path = os.path.join(
+        """Per-app txn sidecar path."""
+        return os.path.join(
             self.root, table, "_txns", f"{self._fs_safe_name(app_id)}.json"
         )
-        legacy = self._legacy_safe_name(app_id)
-        if legacy is not None and not self.commit.io_exists(path):
-            lpath = os.path.join(self.root, table, "_txns", f"{legacy}.json")
-            if self.commit.io_exists(lpath):
-                try:
-                    self.commit.publish_file(lpath, path)
-                except OSError:
-                    pass  # concurrent migration — the winner already moved it
-        return path
 
     def _constraints_dir(self, table: str) -> str:
         return os.path.join(self.root, table, "_constraints")
@@ -1170,29 +1118,18 @@ class TableStore(TableFormat):
             raise ValueError(
                 f"existing data in {table} violates constraint {name}: {expr!r}"
             )
-        cdir = self._constraints_dir(table)
         self.commit.put_object(
-            os.path.join(cdir, f"{safe}.json"),
+            os.path.join(self._constraints_dir(table), f"{safe}.json"),
             json.dumps({"name": name, "expr": expr}).encode(),
         )
-        legacy = self._legacy_safe_name(name)
-        if legacy is not None and legacy != safe:
-            # a pre-r8 store may hold this constraint under its identity
-            # filename; with both present, constraints() would read the
-            # STALE one last (sorted order) — remove the legacy file now
-            # that the update landed under the current name
-            self.commit.io_delete(os.path.join(cdir, f"{legacy}.json"))
 
     def drop_constraint(self, table: str, name: str) -> None:
-        # remove the current image AND any pre-r8 legacy identity file
-        # (ADVICE r8: digest-suffixed lookups left legacy names invisible)
-        names = {self._fs_safe_name(name), self._legacy_safe_name(name)} - {None}
-        for safe in names:
-            # dropping an absent constraint is a no-op (io_delete is
-            # idempotent)
-            self.commit.io_delete(
-                os.path.join(self._constraints_dir(table), f"{safe}.json")
+        # dropping an absent constraint is a no-op (io_delete is idempotent)
+        self.commit.io_delete(
+            os.path.join(
+                self._constraints_dir(table), f"{self._fs_safe_name(name)}.json"
             )
+        )
 
     def constraints(self, table: str) -> dict:
         cdir = self._constraints_dir(table)
@@ -1212,9 +1149,9 @@ class TableStore(TableFormat):
         record and the per-app sidecar. Since round 10 the pointer swap
         is a CAS-log merge on both commit impls, so a concurrent
         maintenance write can no longer clobber the txn map; the sidecar
-        stays as belt-and-braces for pre-r10 stores and for forensic
-        recovery of a hand-edited pointer log — and the re-applied merge
-        is content-idempotent in any case."""
+        stays as belt-and-braces for forensic recovery of a hand-edited
+        or clobbered pointer log — and the re-applied merge is
+        content-idempotent in any case."""
         best = None
         rec = self.commit.read_pointer(os.path.join(self.root, table))
         if rec is not None:
@@ -1291,9 +1228,6 @@ class TableStore(TableFormat):
     def read(self, table: str, version: int | None = None) -> DataFrame:
         entry = self._entry(table, version)
         fm = self._version_filemap(table, entry)
-        if self._load_manifest(table, entry) is None:
-            # pre-r10 version: plain directory read, old behavior bit for bit
-            return self.spark.read.parquet(entry["path"])
         return self._read_rels(table, entry, list(fm), fm)
 
     def vacuum(
@@ -1544,9 +1478,8 @@ class TableStore(TableFormat):
                 self._bloom_mem.pop(key, None)
             self._manifest_mem.pop((table, v), None)
             for mp in (self._stats_path(table, v), self._bloom_path(table, v)):
-                # the bloom sidecar is a parquet DIRECTORY when built by the
-                # distributed writer, a single file for legacy manifests —
-                # io_delete_tree handles both
+                # the stats sidecar is one object, the bloom sidecar a
+                # parquet DIRECTORY — io_delete_tree handles both
                 self.commit.io_delete_tree(mp)
 
         for vp in ver_plans:
@@ -1600,9 +1533,8 @@ class TableStore(TableFormat):
         import math
 
         entry = self._entry(table)
-        rels = list(self._version_filemap(table, entry))
-        files_before = len(rels)
-        partition_by = self._resolve_partition_by(table, partition_by, rels)
+        files_before = len(self._version_filemap(table, entry))
+        partition_by = self._resolve_partition_by(table, entry, partition_by)
         df = self.read(table)
         n_rows = df.count()
         target = max(1, math.ceil(n_rows / rows_per_file))
@@ -1674,42 +1606,23 @@ class TableStore(TableFormat):
             )
 
     def _resolve_partition_by(
-        self, table: str, partition_by: list[str] | None, rels: list[str]
+        self, table: str, entry: dict, partition_by: list[str] | None
     ) -> list[str] | None:
         """Layout-preserving default shared by compact / optimize_layout /
-        optimize_layout_zorder: ``None`` preserves the current version's
-        RECORDED partition spec (the layout contract under partition
-        evolution — path inference is only the legacy manifest-less
-        fallback, and non-Hive nesting degrades to flatten), ``[]``
-        flattens explicitly, a list is taken as given."""
+        optimize_layout_zorder: ``None`` preserves ``entry``'s RECORDED
+        partition spec (the layout contract under partition evolution),
+        ``[]`` flattens explicitly, a list is taken as given."""
         if partition_by is None:
-            rec = self._recorded_partition_by(table, self._entry(table))
-            if rec is not None:
-                return rec or None
-            try:
-                return self._partition_cols(rels) or None
-            except ValueError:
-                return None
+            return self._recorded_partition_by(table, entry) or None
         return list(partition_by) or None
 
-    def _current_rels(self, table: str) -> list[str]:
-        return list(self._version_filemap(table, self._entry(table)))
-
     def current_partition_columns(self, table: str) -> list[str]:
-        """The current version's Hive partition columns (``[]`` when
-        unpartitioned or non-Hive-nested). The layout-preservation probe
-        every full-rewrite path should consult before ``write`` — a
-        rewrite that omits ``partition_by`` silently flattens the table,
-        losing partition pruning for every downstream reader. Prefers the
-        RECORDED spec (partition evolution, round 12); path inference is
-        the legacy manifest-less fallback."""
-        rec = self._recorded_partition_by(table, self._entry(table))
-        if rec is not None:
-            return rec
-        try:
-            return self._partition_cols(self._current_rels(table))
-        except ValueError:
-            return []
+        """The current version's RECORDED partition spec (``[]`` when
+        unpartitioned). The layout-preservation probe every full-rewrite
+        path should consult before ``write`` — a rewrite that omits
+        ``partition_by`` silently flattens the table, losing partition
+        pruning for every downstream reader."""
+        return self._recorded_partition_by(table, self._entry(table))
 
     def optimize_layout(
         self,
@@ -1732,16 +1645,14 @@ class TableStore(TableFormat):
         partition columns, so each partition occupies a contiguous task
         range and its files stay disjoint on the cluster key; ``[]``
         flattens explicitly."""
-        base = self._entry(table)["v"]
-        pcols = self._resolve_partition_by(
-            table, partition_by, self._current_rels(table)
-        )
+        entry = self._entry(table)
+        pcols = self._resolve_partition_by(table, entry, partition_by)
         df = self.read(table)
         keys = [*(pcols or []), *cluster_by]
         clustered = df.repartitionByRange(num_files, *keys).sortWithinPartitions(
             *keys
         )
-        return self.write(table, clustered, pcols, _expect_base=base)
+        return self.write(table, clustered, pcols, _expect_base=entry["v"])
 
     def optimize_layout_zorder(
         self,
@@ -1761,10 +1672,8 @@ class TableStore(TableFormat):
         (at 100 TB they come from table stats, not an extra scan).
         Hive-partitioned layouts are preserved by default, the Z-curve
         applying WITHIN each partition (round 9); ``[]`` flattens."""
-        base = self._entry(table)["v"]
-        pcols = self._resolve_partition_by(
-            table, partition_by, self._current_rels(table)
-        )
+        entry = self._entry(table)
+        pcols = self._resolve_partition_by(table, entry, partition_by)
         df = self.read(table)
         z = zorder_key(
             {c: (F.col(c), lo, hi) for c, (lo, hi) in cols_with_bounds.items()},
@@ -1776,7 +1685,7 @@ class TableStore(TableFormat):
             .sortWithinPartitions(*(pcols or []), "__z")
             .drop("__z")
         )
-        return self.write(table, clustered, pcols, _expect_base=base)
+        return self.write(table, clustered, pcols, _expect_base=entry["v"])
 
     def _stats_path(self, table: str, version: int) -> str:
         return os.path.join(self.root, table, "_stats", f"v{version:04d}.json")
@@ -2138,9 +2047,10 @@ class TableStore(TableFormat):
         import datetime as _dt
 
         smin, smax, nulls = stat.get("min"), stat.get("max"), stat.get("null_count")
-        # legacy manifests may carry NaN bounds (collector now rejects them
-        # at build time): every NaN comparison is False, so the prune tests
-        # below would keep anyway — but be explicit and conservative
+        # a NaN bound (the collector rejects them at build time; a
+        # hand-edited or foreign stats sidecar may still carry one): every
+        # NaN comparison is False, so the prune tests below would keep
+        # anyway — but be explicit and conservative
         if any(isinstance(b, float) and b != b for b in (smin, smax)):
             return True
         if smin is None or smax is None:
@@ -2305,12 +2215,9 @@ class TableStore(TableFormat):
         return out
 
     def _bloom_parts(self, path: str) -> list[str]:
-        """The sidecar's parquet part files, enumerated through the
-        commit seam (round 10 — the data plane never walks storage with
-        ``os`` directly): a single file for pre-r8 sidecars, the sorted
-        part list for the distributed writer's directory form."""
-        if self.commit.io_isfile(path):
-            return [path]
+        """The sidecar directory's sorted parquet part files, enumerated
+        through the commit seam (round 10 — the data plane never walks
+        storage with ``os`` directly)."""
         return [
             p for p in self.commit.io_list_files(path) if p.endswith(".parquet")
         ]
@@ -2319,8 +2226,7 @@ class TableStore(TableFormat):
         """{col: (m, k)} for every column present in the sidecar — reads
         ONLY the tiny col/m/k columns (the multi-MB ``bloom`` blobs stay on
         disk), so the existence/sizing check before a build or probe costs
-        metadata, not a manifest parse. Works on both sidecar forms: the
-        distributed writer's parquet DIRECTORY and the pre-r8 single file."""
+        metadata, not a manifest parse."""
         import pyarrow.parquet as pq
 
         out: dict[str, tuple[int, int]] = {}
@@ -2448,13 +2354,10 @@ class TableStore(TableFormat):
         append-only (each build lands its own part files; Spark's task
         commit renames completed files in, and readers ignore the
         ``_temporary`` staging dir), so two processes adding DIFFERENT
-        columns concurrently both land — strictly better than the pre-r8
-        read-merge-replace, which could lose one side. Two processes
-        building the SAME column race to duplicate rows; the loader
-        collapses them, and the bitmaps are identical (same immutable
-        data, same hashes). Pre-r8 single-FILE sidecars stay readable;
-        the first append migrates the legacy file into the directory as a
-        part file (a rename, no data movement).
+        columns concurrently both land — a read-merge-replace of one file
+        could lose one side. Two processes building the SAME column race
+        to duplicate rows; the loader collapses them, and the bitmaps are
+        identical (same immutable data, same hashes).
 
         Storage: a PARQUET sidecar (columns col/file/m/k/bloom, raw binary
         filters) — columnar, no base64 inflation, arrow-speed parse, and
@@ -2676,18 +2579,6 @@ class TableStore(TableFormat):
                 if sel is not None
                 else None
             )
-            if self.commit.io_isfile(bp):
-                # pre-r8 single-file sidecar: become the first part file of
-                # the directory form (pure renames — no data movement). Two
-                # processes racing the migration: the rename loser just
-                # proceeds (the winner already moved the file in)
-                legacy = f"{bp}.legacy-{os.getpid()}-{time.time_ns()}"
-                try:
-                    self.commit.publish_file(bp, legacy)
-                    self.commit.io_mkdirs(bp)
-                    self.commit.publish_file(legacy, os.path.join(bp, "part-legacy.parquet"))
-                except FileNotFoundError:
-                    pass
             # each build job writes to its OWN staging dir, then renames the
             # completed part files into the sidecar. A direct mode=append of
             # two concurrent jobs shares Hadoop's _temporary/0 staging under
@@ -2809,6 +2700,9 @@ class TableStore(TableFormat):
         Returns ``(df, report)``; the report carries files_total /
         files_read / files_skipped plus the per-stage skip counts, so scan
         I/O claims are testable (the same contract as read_pruned)."""
+        # reject a bad probe value BEFORE the build: a table-sized bloom
+        # job for a probe that can only raise is pure waste
+        self._probe_tuples([col], [value], 1)
         v = self._entry(table, version)["v"]
         if self._bloom_cached(table, v, col) is None:
             self._bloom_build(
@@ -2898,6 +2792,40 @@ class TableStore(TableFormat):
             F.broadcast(keys), on=cols, how="left_anti" if anti else "left_semi"
         )
 
+    @staticmethod
+    def _probe_tuples(cols: list[str], values: list, max_values: int) -> list[tuple]:
+        """The key probe's value checks, before any table access: at
+        least one and at most ``max_values`` values, each a tuple (or
+        scalar, for one column) of exactly ``len(cols)`` non-NULL
+        components sharing one Python type per column. Returns the
+        values as tuples."""
+        if not values:
+            raise ValueError("key probe needs at least one value")
+        if len(values) > max_values:
+            raise ValueError(
+                f"key probe got {len(values)} values (max {max_values}): use a "
+                "broadcast semi-join against a values DataFrame at this size"
+            )
+        tuples = [tuple(t) if isinstance(t, (tuple, list)) else (t,) for t in values]
+        if any(len(t) != len(cols) for t in tuples):
+            raise ValueError(
+                f"key probe: every value must have exactly {len(cols)} "
+                f"components for key columns {cols}"
+            )
+        for j, c in enumerate(cols):
+            comp = [t[j] for t in tuples]
+            if any(x is None for x in comp):
+                raise ValueError(
+                    "key probe values containing None: equality never matches NULL"
+                )
+            types = {type(x) for x in comp}
+            if len(types) > 1:
+                raise ValueError(
+                    f"key probe values must share one Python type per column, "
+                    f"got {sorted(t.__name__ for t in types)} for {c}"
+                )
+        return tuples
+
     def _in_candidates_multi(
         self,
         table: str,
@@ -2944,31 +2872,7 @@ class TableStore(TableFormat):
         import datetime as _dt
         import math as _math
 
-        if not values:
-            raise ValueError("key probe needs at least one value")
-        if len(values) > max_values:
-            raise ValueError(
-                f"key probe got {len(values)} values (max {max_values}): use a "
-                "broadcast semi-join against a values DataFrame at this size"
-            )
-        tuples = [tuple(t) if isinstance(t, (tuple, list)) else (t,) for t in values]
-        if any(len(t) != len(cols) for t in tuples):
-            raise ValueError(
-                f"key probe: every value must have exactly {len(cols)} "
-                f"components for key columns {cols}"
-            )
-        for j, c in enumerate(cols):
-            comp = [t[j] for t in tuples]
-            if any(x is None for x in comp):
-                raise ValueError(
-                    "key probe values containing None: equality never matches NULL"
-                )
-            types = {type(x) for x in comp}
-            if len(types) > 1:
-                raise ValueError(
-                    f"key probe values must share one Python type per column, "
-                    f"got {sorted(t.__name__ for t in types)} for {c}"
-                )
+        tuples = self._probe_tuples(cols, values, max_values)
         entry = self._entry(table, version)
         v = entry["v"]
         stats = self.collect_file_stats(table, cols, version=v)
@@ -3215,33 +3119,6 @@ class TableStore(TableFormat):
                 return unquote(v)
         return None
 
-    @staticmethod
-    def _partition_cols(rels: list[str]) -> list[str]:
-        """Hive-style partition columns from a version's relative file
-        paths (``a=1/b=x/part-....parquet`` -> ``["a", "b"]``); ``[]``
-        when files sit at the version root. Raises on a non-Hive nested
-        layout or inconsistent nesting depth — those cannot round-trip
-        through ``partitionBy`` and a COW rewrite would scramble them."""
-        pcols: list[str] | None = None
-        for rel in rels:
-            comps = rel.split(os.sep)[:-1]
-            cur = []
-            for c in comps:
-                if "=" not in c:
-                    raise CowContractError(
-                        f"non-Hive nested layout ({rel!r}): copy-on-write "
-                        "rewrites need root-level files or name=value "
-                        "partition dirs"
-                    )
-                cur.append(c.split("=", 1)[0])
-            if pcols is None:
-                pcols = cur
-            elif pcols != cur:
-                raise CowContractError(
-                    f"inconsistent partition nesting: {pcols} vs {cur} ({rel!r})"
-                )
-        return pcols or []
-
     def _stat_dooms(self, stat: dict, rec: dict, clo, chi, dtype: str) -> bool:
         """Dual of :meth:`_stat_keeps`: True ONLY when the file's stats
         PROVE every row satisfies ``[clo, chi]`` — min/max present and
@@ -3306,10 +3183,9 @@ class TableStore(TableFormat):
         """The copy-on-write staging protocol shared by :meth:`delete_in`,
         :meth:`delete_where` and :meth:`merge_in`: list every untouched
         file in the new version's manifest BY REFERENCE to its physical
-        holder (round 10 — zero bytes moved AND zero copy requests; the
-        pre-r10 protocol hard-linked or server-side-COPYed each one,
-        which on an object store made a 1-file delete on a 100k-file
-        table cost 100k COPY requests), run the ONE rewrite job ``out``
+        holder (round 10 — zero bytes moved AND zero copy requests, where
+        hard-linking or server-side-COPYing each one made a 1-file delete
+        on a 100k-file object-store table cost 100k COPY requests), run the ONE rewrite job ``out``
         (``partitionBy`` the layout's own partition columns when it has
         them, so rewritten rows land back in their partition dirs with
         the same physical schema as the referenced files), move its part
@@ -3334,13 +3210,11 @@ class TableStore(TableFormat):
         # generations may sit under OLDER specs, so inferring one spec
         # from the mixed rel list would refuse a perfectly healthy table
         pcols = self._recorded_partition_by(table, entry)
-        if pcols is None:
-            pcols = self._partition_cols(all_rels)
         filemap = self._version_filemap(table, entry)
         # references keep their old physical column layout: the base's
         # rename mapping AND retired-name history carry forward
         # (rounds 11+12)
-        base_man = self._load_manifest(table, entry) or {}
+        base_man = self._manifest(table, entry)
         renames = base_man.get("renames", [])
         retired = base_man.get("retired", [])
         widened = base_man.get("widened", [])
@@ -3357,22 +3231,21 @@ class TableStore(TableFormat):
         # pre-add generations need the back-fill applied at read time.
         sch = out.schema if out is not None else self._version_schema(table, entry)
         base_rec = self._recorded_schema(table, entry)
-        if base_rec is not None:
-            base_md = {f.name: f.metadata for f in base_rec.fields if f.metadata}
-            if base_md:
-                from pyspark.sql.types import StructField, StructType
+        base_md = {f.name: f.metadata for f in base_rec.fields if f.metadata}
+        if base_md:
+            from pyspark.sql.types import StructField, StructType
 
-                sch = StructType(
-                    [
-                        StructField(
-                            f.name,
-                            f.dataType,
-                            f.nullable,
-                            metadata=f.metadata or base_md.get(f.name) or {},
-                        )
-                        for f in sch.fields
-                    ]
-                )
+            sch = StructType(
+                [
+                    StructField(
+                        f.name,
+                        f.dataType,
+                        f.nullable,
+                        metadata=f.metadata or base_md.get(f.name) or {},
+                    )
+                    for f in sch.fields
+                ]
+            )
         schema_json = sch.json()
         path = os.path.join(self.root, table, f"v{version:04d}")
         affected_set = set(affected)
@@ -3811,11 +3684,8 @@ class TableStore(TableFormat):
         # anywhere, r12). With the single snapshot, any commit that lands
         # after it — ALTER or data — fails expect_base and retries.
         entry0 = self._entry(table)
-        if self._load_manifest(table, entry0) is not None:
-            fm0 = self._version_filemap(table, entry0)
-            _target = self._read_rels(table, entry0, list(fm0), fm0)
-        else:  # pre-r10 version: plain directory read
-            _target = self.spark.read.parquet(entry0["path"])
+        fm0 = self._version_filemap(table, entry0)
+        _target = self._read_rels(table, entry0, list(fm0), fm0)
         target_cols = _target.columns
         target_types = dict(_target.dtypes)
         missing_cols = [c for c in target_cols if c not in updates.columns]
@@ -4025,9 +3895,7 @@ class TableStore(TableFormat):
             pcols = list(new_partition_by)
         else:
             pcols = self._recorded_partition_by(table, entry)
-            if pcols is None:
-                pcols = self._partition_cols(list(fm)) if fm else []
-        base_man = self._load_manifest(table, entry) or {}
+        base_man = self._manifest(table, entry)
         renames = list(base_man.get("renames", []))
         for rn in new_renames or []:
             renames.append({**rn, "since": version})
@@ -4085,9 +3953,7 @@ class TableStore(TableFormat):
         from pyspark.sql.types import StructField, StructType
 
         entry = self._entry(table)
-        schema = self._recorded_schema(table, entry) or self._version_schema(
-            table, entry
-        )
+        schema = self._recorded_schema(table, entry)
         dupes = [c for c in columns if c in schema.names]
         if dupes:
             raise ValueError(f"add_columns: {dupes} already exist in {table}")
@@ -4126,9 +3992,7 @@ class TableStore(TableFormat):
         import re as _re
 
         entry = self._entry(table)
-        schema = self._recorded_schema(table, entry) or self._version_schema(
-            table, entry
-        )
+        schema = self._recorded_schema(table, entry)
         missing = [c for c in cols if c not in schema.names]
         if missing:
             raise ValueError(f"drop_columns: {missing} not in {table}'s schema")
@@ -4136,7 +4000,7 @@ class TableStore(TableFormat):
         # guard on the RECORDED spec plus every OLDER spec's dir columns:
         # a column living in any referenced generation's directory names
         # cannot be dropped (partition evolution, round 12)
-        pcols = set(self._recorded_partition_by(table, entry) or []) | (
+        pcols = set(self._recorded_partition_by(table, entry)) | (
             self._dir_partition_union(fm)
         )
         part_hits = [c for c in cols if c in pcols]
@@ -4189,9 +4053,7 @@ class TableStore(TableFormat):
         from pyspark.sql.types import StructField, StructType
 
         entry = self._entry(table)
-        schema = self._recorded_schema(table, entry) or self._version_schema(
-            table, entry
-        )
+        schema = self._recorded_schema(table, entry)
         missing = [c for c in mapping if c not in schema.names]
         if missing:
             raise ValueError(f"rename_columns: {missing} not in {table}'s schema")
@@ -4211,7 +4073,7 @@ class TableStore(TableFormat):
             dup = sorted({t for t in mapping.values() if post.count(t) > 1})
             raise ValueError(f"rename_columns: target names {dup} collide")
         fm = self._version_filemap(table, entry)
-        pcols = set(self._recorded_partition_by(table, entry) or []) | (
+        pcols = set(self._recorded_partition_by(table, entry)) | (
             self._dir_partition_union(fm)
         )
         part_hits = [c for c in mapping if c in pcols]
@@ -4279,16 +4141,14 @@ class TableStore(TableFormat):
         from pyspark.sql.types import StructField, StructType
 
         entry = self._entry(table)
-        schema = self._recorded_schema(table, entry) or self._version_schema(
-            table, entry
-        )
+        schema = self._recorded_schema(table, entry)
         missing = [c for c in mapping if c not in schema.names]
         if missing:
             raise ValueError(
                 f"alter_column_type: {missing} not in {table}'s schema"
             )
         fm = self._version_filemap(table, entry)
-        pcols = set(self._recorded_partition_by(table, entry) or []) | (
+        pcols = set(self._recorded_partition_by(table, entry)) | (
             self._dir_partition_union(fm)
         )
         part_hits = [c for c in mapping if c in pcols]
@@ -4363,9 +4223,7 @@ class TableStore(TableFormat):
         strips spec columns from file payloads); ``[]`` evolves to an
         unpartitioned layout for future writes."""
         entry = self._entry(table)
-        schema = self._recorded_schema(table, entry) or self._version_schema(
-            table, entry
-        )
+        schema = self._recorded_schema(table, entry)
         missing = [c for c in partition_by if c not in schema.names]
         if missing:
             raise ValueError(
@@ -4381,8 +4239,7 @@ class TableStore(TableFormat):
                 "must remain (partitionBy strips spec columns from file "
                 "payloads)"
             )
-        current = self._recorded_partition_by(table, entry)
-        if current is not None and list(partition_by) == current:
+        if list(partition_by) == self._recorded_partition_by(table, entry):
             raise ValueError(
                 f"alter_partition_spec: {table} already has spec "
                 f"{partition_by}"
@@ -4470,13 +4327,9 @@ class TableStore(TableFormat):
             base = info["base"]
         self._clone_mem.pop(dst, None)
         fm = self._version_filemap(src, entry)
-        schema = self._recorded_schema(src, entry) or self._version_schema(
-            src, entry
-        )
+        schema = self._recorded_schema(src, entry)
         pcols = self._recorded_partition_by(src, entry)
-        if pcols is None:
-            pcols = self._partition_cols(list(fm))
-        base_man = self._load_manifest(src, entry) or {}
+        base_man = self._manifest(src, entry)
         version = self._claim_version(dst)
         path = os.path.join(ddir, f"v{version:04d}")
         record = self._manifest_record(
@@ -4546,14 +4399,8 @@ class TableStore(TableFormat):
             self.commit.put_object(self._stats_path(dst, version), raw)
         sbp = self._bloom_path(src, entry["v"])
         dbp = self._bloom_path(dst, version)
-        bloom_files = self.commit.io_list_files(sbp)
-        if bloom_files:
-            for f in bloom_files:
-                self.commit.link_or_copy(
-                    f, os.path.join(dbp, os.path.relpath(f, sbp))
-                )
-        elif self.commit.io_exists(sbp):
-            self.commit.link_or_copy(sbp, dbp)
+        for f in self.commit.io_list_files(sbp):
+            self.commit.link_or_copy(f, os.path.join(dbp, os.path.relpath(f, sbp)))
         return {"version": version, "base": base, "files": len(fm)}
 
     def history(self, table: str) -> list[dict]:

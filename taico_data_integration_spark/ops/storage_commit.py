@@ -25,9 +25,7 @@ TableStore's correctness needs exactly four primitives (VERDICT r8 #1):
    ``_ptr/ptr-<seq+1>.json`` conditionally (POSIX: ``O_EXCL``; object
    stores: conditional PUT), a real CAS loop, so concurrent
    read-modify-merge swaps can never lose each other's txn records and
-   ``expect_base`` conflict checks are linearizable everywhere. Pre-r10
-   POSIX tables carrying a ``_meta.json`` pointer are read
-   transparently and migrated to the log on first swap.
+   ``expect_base`` conflict checks are linearizable everywhere.
 
 What each implementation ASSUMES of its storage:
 
@@ -122,8 +120,7 @@ class StorageCommit(ABC):
     check-then-replace window (ADVICE r9: two COW mutations computed
     from the same base could both pass the check and the last
     ``os.replace`` silently dropped the other's delete) no longer
-    exists. Legacy tables whose pointer is a pre-r10 ``_meta.json`` are
-    read transparently and MIGRATED into the log on their first swap."""
+    exists."""
 
     #: CAS log entries kept after a successful swap (older entries are
     #: dead: max() of what remains is unaffected)
@@ -218,9 +215,6 @@ class StorageCommit(ABC):
         """True when ``path`` is an object OR a non-empty prefix."""
         return os.path.exists(path)
 
-    def io_isfile(self, path: str) -> bool:
-        return os.path.isfile(path)
-
     def io_mtime(self, path: str) -> float | None:
         try:
             return os.path.getmtime(path)
@@ -281,13 +275,6 @@ class StorageCommit(ABC):
     def _ptr_dir(self, table_dir: str) -> str:
         return os.path.join(table_dir, "_ptr")
 
-    def _legacy_pointer(self, table_dir: str) -> dict | None:
-        """Pre-r10 pointer file (``_meta.json``): still readable so
-        existing stores open unchanged; superseded by the log from the
-        first post-migration swap on."""
-        raw = self._obj_get(os.path.join(table_dir, "_meta.json"))
-        return json.loads(raw) if raw is not None else None
-
     def _latest(self, table_dir: str) -> tuple[int, dict | None, list[int]]:
         # Torn-read guard (r12, found by the multi-process ALTER stress):
         # if EVERY listed entry reads back None, the log did not vanish —
@@ -307,7 +294,7 @@ class StorageCommit(ABC):
                 if m:
                     seqs.append(int(m.group(1)))
             if not seqs:
-                return -1, self._legacy_pointer(table_dir), seqs
+                return -1, None, seqs
             for seq in sorted(seqs, reverse=True):
                 raw = self._obj_get(
                     os.path.join(self._ptr_dir(table_dir), f"ptr-{seq:012d}.json")
@@ -342,8 +329,8 @@ class StorageCommit(ABC):
         ``mutate``-raised conflict checks linearizable) and retries.
         Concurrent swaps therefore MERGE (no lost txn records). After a
         successful swap the log is pruned to the most recent
-        ``keep_log`` entries and any legacy ``_meta.json`` is retired —
-        old entries are dead: max() of what remains is unaffected."""
+        ``keep_log`` entries — old entries are dead: max() of what
+        remains is unaffected."""
         while True:
             seq, prev, seqs = self._latest(table_dir)
             rec = mutate(prev)
@@ -354,11 +341,6 @@ class StorageCommit(ABC):
                     self._obj_delete(
                         os.path.join(self._ptr_dir(table_dir), f"ptr-{old:012d}.json")
                     )
-                if seq == -1:
-                    # first post-migration swap: the legacy file is now
-                    # dead weight — retire it so a stale copy can never
-                    # be mistaken for the pointer by out-of-band tooling
-                    self._obj_delete(os.path.join(table_dir, "_meta.json"))
                 return rec
             # lost the CAS: re-read (picks up the winner's record) and retry
 
@@ -369,9 +351,7 @@ class PosixCommit(StorageCommit):
     cross-device copy fallback. The pointer swap is the SHARED
     put-if-absent CAS log (round 10, over O_EXCL): concurrent swaps
     merge and ``expect_base`` conflict checks are linearizable — same
-    assertions as the conditional-put impl, no POSIX caveat. Pre-r10
-    ``_meta.json`` pointers are read transparently and migrated to the
-    log on the table's first swap."""
+    assertions as the conditional-put impl, no POSIX caveat."""
 
     def __init__(self, keep_log: int = 16):
         self.keep_log = keep_log
@@ -487,9 +467,6 @@ class ConditionalPutCommit(StorageCommit):
             return True
         return bool(self.backend.list_tree(path))
 
-    def io_isfile(self, path: str) -> bool:
-        return self.backend.exists(path)
-
     def io_mtime(self, path: str) -> float | None:
         return self.backend.mtime(path)
 
@@ -575,9 +552,6 @@ class LocalEmulatedBackend:
                 return f.read()
         except (FileNotFoundError, IsADirectoryError):
             return None
-
-    def exists(self, key: str) -> bool:
-        return os.path.isfile(key)
 
     def mtime(self, key: str) -> float | None:
         try:
@@ -667,10 +641,6 @@ class FakeObjectStore:
     def get(self, key: str) -> bytes | None:
         with self._lock:
             return self._objects.get(key)
-
-    def exists(self, key: str) -> bool:
-        with self._lock:
-            return key in self._objects
 
     def mtime(self, key: str) -> float | None:
         with self._lock:

@@ -170,11 +170,11 @@ def stream_merge_into(
     ``cow_max_keys`` (round 8; composite keys + partitioned layouts since
     round 9) enables the copy-on-write fast path: each micro-batch merges
     via ``TableStore.merge_in`` — only the files the batch's keys live in
-    are rewritten, the rest hard-link into the new version — so per-batch
+    are rewritten, the rest are kept by manifest reference — so per-batch
     sink cost is O(affected files + batch) instead of O(table). The very
     shape a long-running stream needs: without it every micro-batch
     rewrites the whole (growing) table. Batches that break merge_in's
-    contract (too many distinct keys, NULL keys, non-Hive nested layout)
+    contract (too many distinct keys, NULL keys, an uncastable key)
     fall back to the full anti-join merge automatically; results are
     identical either way (merge_in == merge_upsert row-for-row, pinned in
     tests)."""
@@ -197,7 +197,7 @@ def stream_merge_into(
                     store.merge_in(table, up, keys, max_keys=cow_max_keys)
                 return
             except ValueError:
-                pass  # contract miss (key count/NULLs/layout): full merge below
+                pass  # contract miss (key count/NULLs/uncastable key): full merge below
         if not store.exists(table):
             merged = batch_df
             pby = None

@@ -224,7 +224,7 @@ def test_erase_subjects_routes_through_cow_fast_path(spark, tmp_path):
 
 def test_erase_subjects_contract_miss_vs_misuse(spark, tmp_path):
     """ADVICE r9: the fast path's fallback catches ONLY documented
-    contract misses (CowContractError: uncastable key, non-Hive layout) —
+    contract misses (CowContractError: an uncastable key) —
     a wrong column name in table_key_cols is a programming error and
     propagates instead of silently paying a full rewrite per call."""
     import pytest as _pt
@@ -2493,56 +2493,6 @@ def test_bloom_build_is_distributed_and_sidecar_loads_per_column(spark, tmp_path
     assert rep["files_read"] < rep["files_total"]
 
 
-def test_bloom_legacy_single_file_sidecar_migrates_on_append(spark, tmp_path):
-    """Pre-r8 sidecars were a single parquet FILE. They must stay readable,
-    and the first append must migrate the file into the directory form by
-    rename (both columns then probe correctly)."""
-    import os as _os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from taico_data_integration_spark.ops.incremental import TableStore
-
-    store = TableStore(spark, str(tmp_path))
-    df = spark.range(0, 8_000).selectExpr("id AS k", "CAST(id % 97 AS INT) AS grp")
-    store.write("t", df.repartition(4))
-    # build 'grp' normally, then REWRITE the sidecar as the legacy single
-    # file to simulate a pre-r8 store
-    man = store.collect_file_blooms("t", ["grp"])
-    bp = store._bloom_path("t", store._read_meta("t")["current"])
-    rec = man["cols"]["grp"]
-    rows = list(rec["files"].items())
-    t = pa.table(
-        {
-            "col": pa.array(["grp"] * len(rows)),
-            "file": pa.array([r[0] for r in rows]),
-            "m": pa.array([rec["m"]] * len(rows), pa.int64()),
-            "k": pa.array([rec["k"]] * len(rows), pa.int64()),
-            "bloom": pa.array([r[1] for r in rows], pa.binary()),
-        }
-    )
-    import shutil as _shutil
-
-    _shutil.rmtree(bp)
-    pq.write_table(t, bp)
-    assert _os.path.isfile(bp)
-
-    # fresh store (no mem cache): legacy file reads fine
-    store2 = TableStore(spark, str(tmp_path))
-    got, rep = store2.read_point("t", "grp", 13)
-    assert got.count() == df.where("grp = 13").count() > 0
-
-    # appending a new column migrates file -> directory, keeping both
-    store2.collect_file_blooms("t", ["k"])
-    assert _os.path.isdir(bp)
-    assert set(store2._bloom_cols(bp)) == {"grp", "k"}
-    g2, _ = store2.read_point("t", "k", 4321)
-    assert g2.count() == 1
-    g3, _ = store2.read_point("t", "grp", 13)
-    assert g3.count() == df.where("grp = 13").count()
-
-
 def test_bloom_mem_cache_is_bounded_lru(spark, tmp_path):
     """ADVICE r7: the in-process bloom cache must not grow without bound in
     a long-lived driver — it is an LRU over (table, version, col); evicted
@@ -2961,57 +2911,6 @@ def test_merge_in_casts_updates_to_target_types(spark, tmp_path):
     assert got.count() == 5_001
     assert got.where("k = 3").first().val == 99.0
     assert got.where("k = 10000000").first().val == 77.0
-
-
-def test_fs_safe_name_legacy_lookup_migration(spark, tmp_path):
-    """Regression (ADVICE r8): r8's second-preimage fix suffixes safe
-    names matching '-hhhhhhhh$' (8-digit date suffixes like
-    'etl-20260815' qualify), which orphaned pre-r8 stores' sidecars
-    written under the identity filename. Lookups must probe the legacy
-    name: last_txn finds (and migrates) a legacy txn sidecar,
-    drop_constraint removes a legacy constraint file, and set_constraint
-    doesn't leave a stale legacy duplicate shadowing the update."""
-    import json as _json
-    import os as _os
-
-    from taico_data_integration_spark.ops.incremental import TableStore
-
-    name = "etl-20260815"
-    assert TableStore._fs_safe_name(name) != name  # the r8 suffix rule
-    store = TableStore(spark, str(tmp_path))
-    store.write("t", spark.range(0, 10).selectExpr("id AS k", "id * 2 AS v"))
-
-    # pre-r8 txn sidecar under the identity filename
-    tdir = _os.path.join(str(tmp_path), "t", "_txns")
-    _os.makedirs(tdir, exist_ok=True)
-    with open(_os.path.join(tdir, f"{name}.json"), "w") as f:
-        _json.dump({"batch_id": 7}, f)
-    assert store.last_txn("t", name) == 7  # legacy probe, not invisible
-    # migrated: the current-name file now exists, the legacy one is gone
-    assert _os.path.exists(
-        _os.path.join(tdir, f"{TableStore._fs_safe_name(name)}.json")
-    )
-    assert not _os.path.exists(_os.path.join(tdir, f"{name}.json"))
-    # a replayed batch at/below 7 is still skipped through the sidecar
-    assert store.write_with_txn("t", store.read("t"), name, 7) is None
-
-    # pre-r8 constraint file under the identity filename
-    cdir = _os.path.join(str(tmp_path), "t", "_constraints")
-    _os.makedirs(cdir, exist_ok=True)
-    with open(_os.path.join(cdir, f"{name}.json"), "w") as f:
-        _json.dump({"name": name, "expr": "v >= 0"}, f)
-    assert store.constraints("t") == {name: "v >= 0"}
-    # an update must win over the stale legacy file
-    store.set_constraint("t", name, "v >= 0 AND v IS NOT NULL")
-    assert store.constraints("t") == {name: "v >= 0 AND v IS NOT NULL"}
-    store.drop_constraint("t", name)
-    assert store.constraints("t") == {}
-
-    # drop alone (no prior set) also reaches a legacy-named file
-    with open(_os.path.join(cdir, f"{name}.json"), "w") as f:
-        _json.dump({"name": name, "expr": "v >= 0"}, f)
-    store.drop_constraint("t", name)
-    assert store.constraints("t") == {}
 
 
 def test_merge_in_enforces_check_constraints(spark, tmp_path):
@@ -3548,20 +3447,6 @@ def test_delete_metadata_only_drop_guard_rails(spark, tmp_path):
     assert store.read("te").where("g = 1").count() == 0
 
 
-def test_cow_rejects_non_hive_nested_layout(spark, tmp_path):
-    """A nested layout that is NOT name=value partitioning cannot
-    round-trip through partitionBy — the COW paths refuse it loudly
-    instead of scrambling file placement."""
-    from taico_data_integration_spark.ops.incremental import TableStore
-
-    assert TableStore._partition_cols(["a=1/f.parquet", "a=2/g.parquet"]) == ["a"]
-    assert TableStore._partition_cols(["f.parquet"]) == []
-    with pytest.raises(ValueError, match="non-Hive"):
-        TableStore._partition_cols(["sub/f.parquet"])
-    with pytest.raises(ValueError, match="inconsistent"):
-        TableStore._partition_cols(["a=1/f.parquet", "a=1/b=2/g.parquet"])
-
-
 def test_bloom_mixed_sizing_rows_never_false_negative(spark, tmp_path):
     """Regression (ADVICE r8): two processes concurrently building the
     SAME column with DIFFERENT sizings both pass the check-then-append
@@ -3869,34 +3754,46 @@ def test_vacuum_retention_survivor_pins_its_references(spark, tmp_path):
     assert not _os.path.exists(d1), "tombstone survived its last referrer"
 
 
-def test_legacy_store_without_manifests_still_works(spark, tmp_path):
-    """A pre-r10 store (version dirs with no _MANIFEST.json, _meta.json
-    pointer) reads transparently, and the FIRST COW mutation on top of
-    it produces a manifest version whose references point into the
-    legacy directory."""
-    import json as _json
+def test_committed_version_without_manifest_is_corrupt(spark, tmp_path):
+    """Every committed version carries _MANIFEST.json — it is the only
+    on-disk format. A committed version stripped of it is a corrupt
+    store: read, compact and merge_in raise a ValueError naming the table
+    and the version instead of guessing the file set from a glob."""
     import os as _os
 
     from taico_data_integration_spark.ops.incremental import TableStore
 
-    # build the legacy layout by hand: Spark writes the parquet + marker,
-    # the pointer is a bare _meta.json
-    tdir = tmp_path / "t"
-    df = spark.range(0, 10_000).selectExpr("id AS k", "CAST(id AS DOUBLE) AS v")
-    df.repartition(4).write.parquet(str(tdir / "v0000"))
-    (tdir / "_meta.json").write_text(_json.dumps({"current": 0, "txns": {}}))
+    store = TableStore(spark, str(tmp_path))
+    df = spark.range(0, 1_000).selectExpr("id AS k", "CAST(id AS DOUBLE) AS v")
+    store.write("t", df.repartition(2))
+    v1, _ = store.delete_in("t", "k", [7])
+    _os.remove(_os.path.join(str(tmp_path), "t", f"v{v1:04d}", "_MANIFEST.json"))
+    pattern = rf"version {v1} of t .*_MANIFEST\.json"
+    updates = spark.createDataFrame([(3, 30.0)], "k bigint, v double")
+    for call in (
+        lambda s: s.read("t"),
+        lambda s: s.compact("t"),
+        lambda s: s.merge_in("t", updates, "k"),
+    ):
+        with pytest.raises(ValueError, match=pattern):
+            call(TableStore(spark, str(tmp_path)))
+    # the intact base version still reads
+    assert store.read("t", version=v1 - 1).count() == 1_000
+
+
+def test_read_point_rejects_null_before_building_a_bloom(spark, tmp_path):
+    """A NULL probe can only raise (equality never matches NULL), so
+    read_point rejects it before its build-on-first-use bloom job: no
+    table-sized Spark job, no sidecar written."""
+    import os as _os
+
+    from taico_data_integration_spark.ops.incremental import TableStore
 
     store = TableStore(spark, str(tmp_path))
-    assert store.read("t").count() == 10_000
-    v1, rep = store.delete_in("t", "k", [7])
-    assert rep["rows_deleted"] == 1 and rep["files_linked"] >= 1
-    fm = store._version_filemap(
-        "t", {"v": v1, "path": str(tdir / f"v{v1:04d}")}
-    )
-    assert sum(1 for vp in fm.values() if vp == 0) == rep["files_linked"]
-    assert store.read("t").count() == 9_999
-    # legacy version itself has no manifest and still reads
-    assert store.read("t", version=0).count() == 10_000
+    store.write("t", spark.range(0, 1_000).selectExpr("id AS k"))
+    with pytest.raises(ValueError, match="NULL"):
+        store.read_point("t", "k", None)
+    assert not _os.path.exists(_os.path.join(str(tmp_path), "t", "_bloom"))
 
 
 def test_bloom_copy_forward_across_referenced_versions(spark, tmp_path):
@@ -3921,7 +3818,9 @@ def test_bloom_copy_forward_across_referenced_versions(spark, tmp_path):
     m1 = store.collect_file_blooms("t", ["u"], num_bits=1 << 14, num_hashes=5)
     assert m1["reused_files"]["u"] == rep["files_linked"] > 0
     # copied + built rows cover every live file, and probes are exact
-    assert set(m1["cols"]["u"]["files"]) == set(store._current_rels("t"))
+    assert set(m1["cols"]["u"]["files"]) == set(
+        store._version_filemap("t", store._entry("t"))
+    )
     got, prep = store.read_point(
         "t", "u", 123, num_bits=1 << 14, num_hashes=5
     )

@@ -217,3 +217,26 @@ def test_runtime_conf_memo_retries_after_a_failed_set(spark, monkeypatch):
     assert spark in catalog._confs_ensured
     load_table(spark, SF_DIR, "nation")
     assert len(calls) == 2 * n_first  # memoized after a clean pass
+
+
+def test_path_metadata_memos_hold_one_entry_per_path(spark, tmp_path):
+    """The scan-stats and schema memos are keyed by path alone: a rewrite
+    at the same path (new mtime) overwrites the entry instead of leaking
+    one per generation, and the new generation is what they serve."""
+    import os
+
+    from taico_data_integration_spark import catalog
+
+    path = str(tmp_path / "t.parquet")
+    for gen in range(3):  # the first write plus two rewrites
+        spark.range(0, 10 + gen).selectExpr(f"id AS c{gen}").write.mode(
+            "overwrite"
+        ).parquet(path)
+        os.utime(path, ns=(10**18 + gen, 10**18 + gen))
+        stats = catalog._local_scan_stats(path)
+        schema = catalog._cached_schema(spark, path)
+        assert stats is not None and stats[0] >= 1
+        assert schema.names == [f"c{gen}"]
+    for cache in (catalog._scan_stats_cache, catalog._schema_cache):
+        entries = [k for k in cache if path in (k if isinstance(k, tuple) else (k,))]
+        assert len(entries) == 1, entries

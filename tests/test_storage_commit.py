@@ -121,24 +121,6 @@ def test_pointer_swap_and_txn_merge(commit, tmp_path):
     assert all(rec["txns"].get(f"app{i}") == i for i in range(16))
 
 
-def test_pointer_legacy_meta_migrates_to_log(tmp_path):
-    """A pre-r10 table whose pointer is a bare ``_meta.json``: reads see
-    it transparently, the first swap seeds the CAS log from it and
-    retires the legacy file, and subsequent reads resolve from the log."""
-    tdir = str(tmp_path / "t")
-    os.makedirs(tdir)
-    with open(os.path.join(tdir, "_meta.json"), "w") as f:
-        json.dump({"current": 3, "txns": {"legacy": 9}}, f)
-    commit = PosixCommit()
-    assert commit.read_pointer(tdir) == {"current": 3, "txns": {"legacy": 9}}
-    commit.write_pointer(
-        tdir,
-        lambda prev: {"current": 4, "txns": dict((prev or {}).get("txns", {}))},
-    )
-    assert not os.path.exists(os.path.join(tdir, "_meta.json"))
-    assert commit.read_pointer(tdir) == {"current": 4, "txns": {"legacy": 9}}
-
-
 def test_condput_pointer_log_pruned(tmp_path):
     """The pointer log doesn't grow without bound: after many swaps only
     the most recent keep_log entries remain, and reads still resolve.
