@@ -18,23 +18,6 @@ def dimension_suite() -> list[Check]:
     ]
 
 
-# include/scripts/validate_staging_data.py:7-62 + soda transform checks.
-def media_fact_suite() -> list[Check]:
-    return [
-        Check("min_rows", "fact_min_rows", {"n": MIN_ROWS}),
-        Check("unique", "fact_id_unique", {"columns": ["id"]}),
-        Check("not_null", "fact_date_not_null", {"column": "date"}),
-        Check("non_negative", "clicks_non_negative", {"column": "clicks"}),
-        Check("non_negative", "impressions_non_negative", {"column": "impressions"}),
-        Check("non_negative", "cost_non_negative", {"column": "media_cost_eur"}),
-        Check(
-            "accepted_values",
-            "media_cluster_domain",
-            {"column": "media_cluster", "values": ["Classical", "CRM", "Digital", "Other"]},
-        ),
-    ]
-
-
 # include/soda/checks/transform/*.yml (retail star).
 def retail_dim_product_suite() -> list[Check]:
     return [

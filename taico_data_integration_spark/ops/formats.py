@@ -226,8 +226,9 @@ class SqlWarehouseFormat(TableFormat):
 
     **Concurrency boundary (narrower than TableStore's — deliberately).**
     TableStore carries a cross-PROCESS contract (O_EXCL version claims,
-    _SUCCESS-gated visibility, atomic rename swap — proven with two real
-    JVMs and a SIGKILLed ghost writer in tests/test_ops.py). This format
+    marker-last _SUCCESS visibility, put-if-absent pointer log — proven
+    with two real JVMs and a SIGKILLed ghost writer in
+    tests/test_ops.py). This format
     does NOT: writers serialize on a per-namespace ``threading.RLock``
     (same-session only) and version bookkeeping is a full overwrite of the
     ``<ns>__meta`` table, so two DRIVER PROCESSES sharing an external

@@ -25,7 +25,7 @@ import os
 import re
 import time
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .formats import TableFormat
@@ -213,12 +213,14 @@ class TableStore(TableFormat):
       atomically creating ``_claims/vNNNN`` (``O_CREAT|O_EXCL``); a loser
       re-reads the store and retries with the next number, so no two
       writers ever produce the same version directory.
-    - **Commit marker**: a version exists in ``history()`` only once its
-      directory contains the ``_SUCCESS`` marker the parquet committer
-      writes AFTER all task files are in place — a killed writer leaves an
-      uncommitted directory that history/read never see and vacuum removes
-      (requires ``mapreduce.fileoutputcommitter.marksuccessfuljobs`` left
-      at its default ``true``).
+    - **Commit marker, written last**: every commit writes its files
+      under the final ``vNNNN`` prefix, and the version exists in
+      ``history()`` only once the store writes the ``_SUCCESS`` marker
+      (carrying the file manifest) put-if-absent AFTER the job finished,
+      its listing was verified against the job's observed row count, and
+      constraints passed (Spark's own marker is switched off). A killed
+      writer leaves a marker-less directory that history/read never see
+      and vacuum removes once it is older than ``stage_ttl_seconds``.
     - **Pointer swap is atomic**: a put-if-absent CAS log entry
       (``_ptr/ptr-<seq>.json``), so readers see the old or the new
       current, never a torn record, and concurrent swaps MERGE. Version
@@ -251,16 +253,16 @@ class TableStore(TableFormat):
     claim, all-or-nothing version publish, unchanged-file sharing, and
     the pointer swap — route through ``self.commit``. The default
     :class:`~.storage_commit.PosixCommit` runs it on POSIX/HDFS
-    semantics (O_EXCL claims and pointer-log entries, atomic directory
-    rename; unchanged files are shared by manifest reference).
+    semantics (O_EXCL claims, commit markers and pointer-log entries;
+    unchanged files are shared by manifest reference).
     :class:`~.storage_commit.ConditionalPutCommit` runs the SAME
     protocol on object-store semantics (conditional PUT-if-absent,
     atomic single-object PUT, server-side COPY, untrusted LIST): no
-    renames, no links, commit markers carry the file manifest, the
-    pointer is a monotonic put-if-absent CAS log. The conformance suite
-    (tests/test_storage_commit.py) proves no lost/torn commit under
-    injected duplicate claims, mid-publish writer death, and torn
-    listings on both implementations.
+    renames, no links. On both, commit markers carry the file manifest
+    and the pointer is a monotonic put-if-absent CAS log. The
+    conformance suite (tests/test_storage_commit.py) proves no lost/torn
+    commit under injected duplicate claims, writer death before the
+    marker, and torn listings on both implementations.
     """
 
     # full extended surface (see formats.CAPABILITY_METHODS); the
@@ -439,6 +441,23 @@ class TableStore(TableFormat):
         info = json.loads(raw) if raw is not None else None
         self._clone_mem[table] = info
         return info
+
+    def _sidecar_donors(
+        self, table: str, skip: int | None = None
+    ) -> list[tuple[str, dict]]:
+        """``(table, entry)`` of every version whose stats/bloom sidecars
+        may donate records to ``table``, newest first: the table's own
+        versions except ``skip`` and, for a shallow clone, the source's
+        (round 12) — the source's sidecars describe the SAME physical
+        bytes only for the clone's foreign rels (vphys <= clone base), so
+        the per-rel soundness checks stay with the callers."""
+        cand = [
+            (table, e) for e in self._read_meta(table)["versions"] if e["v"] != skip
+        ]
+        cl = self._clone_info(table)
+        if cl is not None:
+            cand += [(cl["of"], e) for e in self._read_meta(cl["of"])["versions"]]
+        return sorted(cand, key=lambda te: te[1]["v"], reverse=True)
 
     def _physical_dir(self, table: str, vphys: int) -> str:
         """Directory physically holding generation ``vphys`` as seen from
@@ -672,6 +691,13 @@ class TableStore(TableFormat):
             f"{last[1]} rows but the write job observed {expected_rows} — "
             "stale listing; aborting commit"
         )
+
+    def _publish(self, path: str, record: bytes, own_rels: list[str]) -> None:
+        """Make the version written under ``path`` visible: its manifest
+        first, then the commit marker listing the version's own files,
+        put-if-absent and LAST — the one publish step of every commit."""
+        self.commit.put_object(os.path.join(path, self._MANIFEST_NAME), record)
+        self.commit.commit_direct(path, sorted(own_rels) + [self._MANIFEST_NAME])
 
     def _read_rels(
         self,
@@ -945,8 +971,6 @@ class TableStore(TableFormat):
             # constraints ride the write job itself (Observation — zero
             # extra scans at any size); NULL check results count as
             # violations: CHECK must HOLD, mirroring Delta
-            from pyspark.sql import Observation
-
             obs = Observation(f"constraints_{table}")
             df = df.observe(
                 obs,
@@ -957,42 +981,26 @@ class TableStore(TableFormat):
                     for name, expr in cons.items()
                 ],
             )
-        direct = getattr(self.commit, "supports_direct_publish", False)
-        row_obs = None
-        if direct:
-            # the Observation row count is what PROVES the post-job
-            # listing complete before it becomes the commit manifest
-            from pyspark.sql import Observation
-
-            row_obs = Observation(f"rows_{table}_{time.time_ns()}")
-            df = df.observe(row_obs, F.count(F.lit(1)).alias("n"))
+        # the Observation row count is what PROVES the post-job listing
+        # complete before it becomes the commit manifest
+        row_obs = Observation(f"rows_{table}_{time.time_ns()}")
+        df = df.observe(row_obs, F.count(F.lit(1)).alias("n"))
         version = self._claim_version(table)
         path = os.path.join(self.root, table, f"v{version:04d}")
-        # stage under a dot-name the vNNNN regex can never match: the
-        # version becomes visible only via the atomic rename AFTER
-        # validation, so a constraint-violating write is never observable —
-        # not even transiently — in history(); a writer killed mid-write
-        # leaves only an invisible staging dir that vacuum sweeps. With a
-        # direct-publish commit impl (round 10, VERDICT r9 #4) Spark
-        # writes UNDER THE FINAL PREFIX instead — visibility is the
-        # marker object written LAST, so the un-markered dir is just as
-        # invisible, and the version's data moves ONCE instead of
-        # staging-then-copying; a killed writer leaves marker-less
-        # residue the age-gated vacuum sweeps.
-        staging = os.path.join(self.root, table, f".stage-v{version:04d}")
-        target = path if direct else staging
-        writer = df.write.mode("overwrite")
-        if direct:
-            # Spark's own empty _SUCCESS would make the version look
-            # committed before validation + manifest — suppress it; the
-            # manifest-carrying marker is written by commit_direct below
-            writer = writer.option(
-                "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
-            )
+        # Spark writes UNDER THE FINAL PREFIX: the version becomes visible
+        # only when the manifest-carrying marker is written LAST, after
+        # validation, so a constraint-violating write is never observable
+        # in history(); a writer killed mid-write leaves marker-less
+        # residue the age-gated vacuum sweeps. Spark's own empty _SUCCESS
+        # would make the version look committed before validation and
+        # manifest — suppress it; _publish writes the real marker
+        writer = df.write.mode("overwrite").option(
+            "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
+        )
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         try:
-            writer.parquet(target)
+            writer.parquet(path)
             if obs is not None:
                 bad = {k: v for k, v in obs.get.items() if v}
                 if bad:
@@ -1005,16 +1013,7 @@ class TableStore(TableFormat):
             # READ-BACK column order (partition columns last, declared
             # types) — authoritative only for the empty-DataFrame case,
             # where the declared type is the only truth there is
-            if direct:
-                rels = self._verified_direct_rels(path, int(row_obs.get["n"]))
-            else:
-                rels = []
-                for dirpath, _dirs, files in os.walk(staging):
-                    for name in files:
-                        if name.endswith(".parquet"):
-                            rels.append(
-                                os.path.relpath(os.path.join(dirpath, name), staging)
-                            )
+            rels = self._verified_direct_rels(path, int(row_obs.get["n"]))
             pby = list(partition_by or [])
             fields = [f for f in df.schema.fields if f.name not in pby] + [
                 df.schema[c] for c in pby if c in df.schema.names
@@ -1026,24 +1025,9 @@ class TableStore(TableFormat):
                 pby,
                 StructType(fields).json(),
             )
-            if direct:
-                self.commit.put_object(
-                    os.path.join(path, self._MANIFEST_NAME), record
-                )
-                self.commit.commit_direct(
-                    path, sorted(rels) + [self._MANIFEST_NAME]
-                )
-            else:
-                with open(os.path.join(staging, self._MANIFEST_NAME), "wb") as f:
-                    f.write(record)
-                self.commit.publish_dir(staging, path)
+            self._publish(path, record, rels)
         except BaseException:
-            import shutil
-
-            if direct:
-                self.commit.discard_dir(path)
-            else:
-                shutil.rmtree(staging, ignore_errors=True)
+            self.commit.io_delete_tree(path)
             raise
         self._write_pointer(table, version, txn=_txn, expect_base=_expect_base)
         return version
@@ -1097,10 +1081,10 @@ class TableStore(TableFormat):
         file under ``<table>/_constraints/``, so concurrent edits of
         different constraints never lose each other (no read-modify-write
         of a shared map). Enforcement rides the write job itself
-        (Observation — no extra scan at any size): the version is staged
-        under a hidden name, violation counts are checked when the job
-        finishes, and only a clean result is renamed into visibility — a
-        violating write aborts with ValueError and is never observable,
+        (Observation — no extra scan at any size): violation counts are
+        checked when the job finishes, BEFORE the commit marker, so only
+        a clean result becomes visible — a violating write aborts with
+        ValueError, its prefix is deleted, and it is never observable,
         not even transiently."""
         if not self.exists(table):
             raise ValueError(f"cannot add constraint to non-existent table {table}")
@@ -1241,8 +1225,8 @@ class TableStore(TableFormat):
         """Delta-VACUUM analog: physically delete all but the newest
         `keep_latest` versions. Required after GDPR erasure (ops.deletion) —
         superseded versions still hold the erased rows until vacuumed.
-        Staging dirs (in-flight writes) are reaped only past
-        `stage_ttl_seconds`, protecting live concurrent writers.
+        Marker-less version dirs (in-flight or crashed writes) are reaped
+        only past `stage_ttl_seconds`, protecting live concurrent writers.
 
         ``min_age_seconds`` is the reader-retention horizon (Delta's
         ``deletedFileRetentionDuration``): a version is removable only once
@@ -1274,17 +1258,15 @@ class TableStore(TableFormat):
         structured report of EVERYTHING a real pass would do — version
         removals AND the residue sweep, where the surprising deletions
         live (VERDICT r11 #6): ``{"versions": [...], "tombstoned":
-        [...], "tombstones_swept": [...], "orphans": [...], "stages":
-        [...]}`` — and touches nothing. ``versions`` is every version
-        leaving history; ``tombstoned`` is the subset that tombstones
-        (files still referenced by survivors) rather than deleting
-        outright; ``tombstones_swept`` lists older tombstone dirs whose
-        last references are gone this pass; ``orphans``/``stages`` are
-        the aged marker-less dirs and staging dirs the residue sweep
-        reaps. The real pass executes the same plan and returns the
-        removed version list (API unchanged)."""
-        import shutil
-
+        [...], "tombstones_swept": [...], "orphans": [...]}`` — and
+        touches nothing. ``versions`` is every version leaving history;
+        ``tombstoned`` is the subset that tombstones (files still
+        referenced by survivors) rather than deleting outright;
+        ``tombstones_swept`` lists older tombstone dirs whose last
+        references are gone this pass; ``orphans`` are the aged
+        marker-less version dirs the residue sweep reaps. The real pass
+        executes the same plan and returns the removed version list (API
+        unchanged)."""
         meta = self._read_meta(table)
         versions = meta["versions"]
         # keep_latest=0 means "keep only current": [-0:] slices the WHOLE
@@ -1352,15 +1334,13 @@ class TableStore(TableFormat):
                 }
             )
         # residue sweep plan: tombstones whose last referencing version is
-        # gone, uncommitted orphans (claimed dirs without the commit
-        # marker — a hard-killed writer's leftovers), and .stage-v*
-        # staging dirs a writer died on before the validate+rename.
-        # Claims stay so version numbers are never reused.
+        # gone, and uncommitted orphans (claimed dirs without the commit
+        # marker — a hard-killed or in-flight writer's output). Claims
+        # stay so version numbers are never reused.
         tdir = os.path.join(self.root, table)
         committed = {e["v"] for e in meta["versions"]}
         tomb_plans: list[dict] = []
         orphan_dirs: list[str] = []
-        stage_dirs: list[str] = []
         for name in self.commit.io_list_dir(tdir):
             m = re.fullmatch(r"v(\d{4,})", name)
             p = os.path.join(tdir, name)
@@ -1384,14 +1364,15 @@ class TableStore(TableFormat):
                         }
                     )
                 elif not self.commit.io_exists(os.path.join(p, "_SUCCESS")):
-                    # a marker-less version dir may be a LIVE direct-publish
-                    # writer's in-flight output (round 10) — sweep only past
-                    # stage_ttl_seconds, same discipline as .stage-v dirs;
-                    # age is the newest mtime over the RECURSIVE listing —
-                    # Spark's in-flight writes touch deep task paths
-                    # (_temporary/0/task_.../part-...), not the top level,
-                    # so a shallow probe would age out a live long-running
-                    # writer and delete its output mid-write (ADVICE r10)
+                    # a marker-less version dir may be a LIVE writer's
+                    # in-flight output — sweep only past stage_ttl_seconds,
+                    # the retention-window discipline Delta's VACUUM
+                    # applies to uncommitted files; age is the newest
+                    # mtime over the RECURSIVE listing — Spark's in-flight
+                    # writes touch deep task paths (_temporary/0/task_.../
+                    # part-...), not the top level, so a shallow probe
+                    # would age out a live long-running writer and delete
+                    # its output mid-write (ADVICE r10)
                     ages = [
                         t
                         for t in (
@@ -1407,27 +1388,6 @@ class TableStore(TableFormat):
                         continue  # changed under us — it's live
                     if time.time() - max(ages) > stage_ttl_seconds:
                         orphan_dirs.append(p)
-            elif name.startswith(".stage-v") and not m:
-                # NEVER sweep a live writer's staging dir (it may be between
-                # job completion and the validate+rename): only reap stages
-                # old enough that their writer is provably dead — the same
-                # retention-window discipline Delta's VACUUM applies to
-                # uncommitted files
-                ages = [
-                    t
-                    for t in (
-                        self.commit.io_mtime(p),
-                        *(
-                            self.commit.io_mtime(os.path.join(p, n))
-                            for n in self.commit.io_list_dir(p)
-                        ),
-                    )
-                    if t is not None
-                ]
-                if not ages:
-                    continue  # renamed/removed under us — it's live
-                if time.time() - max(ages) > stage_ttl_seconds:
-                    stage_dirs.append(p)
         if dry_run:
             return {
                 "versions": sorted(vp["v"] for vp in ver_plans),
@@ -1443,7 +1403,6 @@ class TableStore(TableFormat):
                     for tp in tomb_plans
                 ],
                 "orphans": sorted(orphan_dirs),
-                "stages": sorted(stage_dirs),
             }
         # ---- EXECUTE -------------------------------------------------
         # clone-vs-vacuum TOCTOU hardening (round 12): a clone whose
@@ -1505,7 +1464,7 @@ class TableStore(TableFormat):
                 self.commit.io_delete(fpath)
             if tp["reclaimed"]:
                 self.commit.io_delete_tree(tp["path"])
-        for p in orphan_dirs + stage_dirs:
+        for p in orphan_dirs:
             self.commit.io_delete_tree(p)
         return removed
 
@@ -1784,29 +1743,12 @@ class TableStore(TableFormat):
             return foreign_stats[key]
 
         # clone-aware candidates (round 12): a shallow clone's foreign
-        # references (vphys <= clone base) are the same physical bytes
-        # the SOURCE's versions list, so the source's stats sidecars
-        # qualify under the identical per-rel checks — restricted to
-        # foreign rels (a clone-LOCAL generation number can coincide
-        # with a post-clone source version number without sharing bytes)
+        # references are the same physical bytes the SOURCE's versions
+        # list — restricted to foreign rels (a clone-LOCAL generation
+        # number can coincide with a post-clone source version number
+        # without sharing bytes)
         _cl = self._clone_info(table)
-        cand_entries = [
-            (table, e)
-            for e in sorted(
-                (e for e in self._read_meta(table)["versions"] if e["v"] != v),
-                key=lambda e: e["v"],
-                reverse=True,
-            )
-        ]
-        if _cl is not None:
-            cand_entries += [
-                (_cl["of"], e)
-                for e in sorted(
-                    self._read_meta(_cl["of"])["versions"],
-                    key=lambda e: e["v"],
-                    reverse=True,
-                )
-            ]
+        cand_entries = self._sidecar_donors(table, skip=v)
         # column mapping (rounds 11+12): a generation written before a
         # rename carries the column under its OLD physical name, and a
         # generation written before a drop may still carry RETIRED bytes
@@ -2407,25 +2349,12 @@ class TableStore(TableFormat):
             # physical bytes than a read of ours serves — rebuild those
             # through read()/_read_rels (mapping applied) instead
             own_events = self._alter_events(self._load_manifest(table, entry))
-            # clone-aware candidates (round 12): a shallow clone's
-            # foreign references (vphys <= clone base) are the SAME
-            # physical bytes the source's versions list, so the source's
-            # sidecars qualify for copy-forward under the identical
-            # per-rel soundness checks — restricted to foreign rels,
+            # clone-aware candidates (round 12): the source's sidecars
+            # qualify for copy-forward only for the clone's foreign rels,
             # because a clone-LOCAL generation number can coincide with
             # a post-clone source version number without sharing bytes.
             cl = self._clone_info(table)
-            cand_list = [
-                (table, e) for e in self._read_meta(table)["versions"] if e["v"] != v
-            ]
-            if cl is not None:
-                cand_list += [
-                    (cl["of"], e)
-                    for e in self._read_meta(cl["of"])["versions"]
-                ]
-            for cand_tbl, cand in sorted(
-                cand_list, key=lambda te: te[1]["v"], reverse=True
-            ):
+            for cand_tbl, cand in self._sidecar_donors(table, skip=v):
                 if not any(uncovered.values()):
                     break
                 fbp = self._bloom_path(cand_tbl, cand["v"])
@@ -2640,11 +2569,7 @@ class TableStore(TableFormat):
         filters forward (measured at 60M rows: 110 s rebuild vs seconds of
         row copies). Only a column never indexed anywhere uses the given
         sizing."""
-        cand = [(table, e) for e in self._read_meta(table)["versions"]]
-        cl = self._clone_info(table)
-        if cl is not None:
-            cand += [(cl["of"], e) for e in self._read_meta(cl["of"])["versions"]]
-        for tbl, e in sorted(cand, key=lambda te: te[1]["v"], reverse=True):
+        for tbl, e in self._sidecar_donors(table):
             p = self._bloom_path(tbl, e["v"])
             mk = self._bloom_cols(p).get(col) if self.commit.io_exists(p) else None
             if mk is not None:
@@ -3180,31 +3105,34 @@ class TableStore(TableFormat):
         version: int,
         after_write=None,
     ) -> int:
-        """The copy-on-write staging protocol shared by :meth:`delete_in`,
+        """The copy-on-write commit shared by :meth:`delete_in`,
         :meth:`delete_where` and :meth:`merge_in`: list every untouched
         file in the new version's manifest BY REFERENCE to its physical
         holder (round 10 — zero bytes moved AND zero copy requests, where
         hard-linking or server-side-COPYing each one made a 1-file delete
-        on a 100k-file object-store table cost 100k COPY requests), run the ONE rewrite job ``out``
-        (``partitionBy`` the layout's own partition columns when it has
-        them, so rewritten rows land back in their partition dirs with
-        the same physical schema as the referenced files), move its part
-        files into the staging, and publish the staging as version
-        ``version`` — physically containing ONLY the rewrite outputs,
-        the manifest, and the commit marker. References are composed
-        from the BASE version's filemap (already physical), so chains
-        stay depth-1. ``after_write()`` (optional) runs after the
-        rewrite job finishes but BEFORE the version becomes visible —
+        on a 100k-file object-store table cost 100k COPY requests), and
+        run the ONE rewrite job ``out`` directly under the final version
+        prefix (``partitionBy`` the layout's own partition columns when
+        it has them, so rewritten rows land back in their partition dirs
+        with the same physical schema as the referenced files) — the
+        version physically holds ONLY the rewrite outputs, the manifest,
+        and the commit marker. References are composed from the BASE
+        version's filemap (already physical), so chains stay depth-1.
+
+        Visibility is marker-last: the post-job listing is verified
+        complete against the job's own observed row count
+        (:meth:`_verified_direct_rels`), and :meth:`_publish` writes the
+        manifest-carrying marker if-absent. ``after_write()`` (optional)
+        runs after the rewrite job finishes but BEFORE the marker —
         Observation-based constraint verdicts are only available then —
-        and may raise to abort the whole commit (staging removed, no
-        version). A commit whose reference list AND rewrite output are
-        both empty (a delete that doomed every row) records the base
+        and may raise to abort the whole commit. Any failure deletes the
+        prefix; a killed writer leaves marker-less residue the age-gated
+        vacuum sweeps. A commit whose reference list AND rewrite output
+        are both empty (a delete that doomed every row) records the base
         version's schema in the manifest so the table stays readable as
         an empty DataFrame (ADVICE r9 — it used to publish a version
         Spark could not infer a schema from). Returns the number of
         rewrite output part files."""
-        import shutil
-
         # the CURRENT recorded spec governs rewrite outputs and the new
         # manifest; with partition evolution (round 12) referenced
         # generations may sit under OLDER specs, so inferring one spec
@@ -3249,93 +3177,14 @@ class TableStore(TableFormat):
         schema_json = sch.json()
         path = os.path.join(self.root, table, f"v{version:04d}")
         affected_set = set(affected)
-        refs = [
+        files = [
             {"rel": rel, "v": filemap[rel]}
             for rel in all_rels
             if rel not in affected_set
         ]
-        if getattr(self.commit, "supports_direct_publish", False):
-            return self._cow_commit_direct(
-                table, refs, out, version, path, pcols, schema_json,
-                after_write, renames, retired, widened,
-            )
-        staging = os.path.join(self.root, table, f".stage-v{version:04d}")
+        moved = 0
         try:
-            os.makedirs(staging)
-            files = list(refs)
-            moved = 0
             if out is not None:
-                rewrite_dir = os.path.join(staging, ".rewrite")
-                writer = out.write.mode("overwrite")
-                if pcols:
-                    writer = writer.partitionBy(*pcols)
-                writer.parquet(rewrite_dir)
-                if after_write is not None:
-                    after_write()
-                for dirpath, _dirs, names in sorted(os.walk(rewrite_dir)):
-                    reldir = os.path.relpath(dirpath, rewrite_dir)
-                    for name in sorted(names):
-                        if not name.endswith(".parquet"):
-                            continue
-                        dst_dir = (
-                            staging if reldir == "." else os.path.join(staging, reldir)
-                        )
-                        os.makedirs(dst_dir, exist_ok=True)
-                        rel = os.path.join(
-                            "" if reldir == "." else reldir,
-                            f"rewrite-{version:04d}-{name}",
-                        )
-                        os.rename(
-                            os.path.join(dirpath, name),
-                            os.path.join(staging, rel),
-                        )
-                        files.append({"rel": rel, "v": version})
-                        moved += 1
-                shutil.rmtree(rewrite_dir, ignore_errors=True)
-            with open(os.path.join(staging, self._MANIFEST_NAME), "w") as f:
-                f.write(
-                    self._manifest_record(
-                        files, pcols, schema_json, renames, retired, widened
-                    ).decode()
-                )
-            # the commit marker _read_meta requires (Spark writes it for
-            # write()'s staging; this staging is hand-assembled)
-            open(os.path.join(staging, "_SUCCESS"), "w").close()
-            self.commit.publish_dir(staging, path)
-        except BaseException:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-        return moved
-
-    def _cow_commit_direct(
-        self,
-        table: str,
-        refs: list[dict],
-        out: DataFrame | None,
-        version: int,
-        path: str,
-        pcols: list[str],
-        schema_json: str,
-        after_write,
-        renames: list[dict] | None = None,
-        retired: list[dict] | None = None,
-        widened: list[dict] | None = None,
-    ) -> int:
-        """Direct-to-final COW publish (round 10, VERDICT r9 #4): the
-        rewrite job writes UNDER THE FINAL VERSION PREFIX — zero staging
-        copies; the version's only data movement is the write itself.
-        Visibility stays marker-last: the directory is invisible until
-        ``commit_direct`` writes the manifest-carrying marker if-absent,
-        the post-job listing is verified complete against the job's own
-        observed row count (:meth:`_verified_direct_rels`), and any
-        failure discards the whole prefix — a killed writer leaves
-        marker-less residue the age-gated vacuum sweeps."""
-        try:
-            moved = 0
-            files = list(refs)
-            if out is not None:
-                from pyspark.sql import Observation
-
                 row_obs = Observation(f"cow_rows_{table}_{time.time_ns()}")
                 out = out.observe(row_obs, F.count(F.lit(1)).alias("n"))
                 writer = out.write.mode("overwrite").option(
@@ -3347,30 +3196,25 @@ class TableStore(TableFormat):
                 if after_write is not None:
                     after_write()
                 rels_new = self._verified_direct_rels(path, int(row_obs.get["n"]))
-                ref_rels = {f["rel"] for f in refs}
-                if ref_rels & set(rels_new):
+                if {f["rel"] for f in files} & set(rels_new):
                     # astronomically unlikely (UUID part names), but a rel
                     # serving two physical versions would corrupt the
                     # filemap — abort loudly, the retry gets fresh names
                     raise RuntimeError(
-                        f"direct COW publish at {path}: rewrite output "
+                        f"COW publish at {path}: rewrite output "
                         "collides with a referenced rel"
                     )
                 files += [{"rel": r, "v": version} for r in rels_new]
                 moved = len(rels_new)
-            self.commit.put_object(
-                os.path.join(path, self._MANIFEST_NAME),
+            self._publish(
+                path,
                 self._manifest_record(
                     files, pcols, schema_json, renames, retired, widened
                 ),
-            )
-            self.commit.commit_direct(
-                path,
-                sorted(f["rel"] for f in files if f["v"] == version)
-                + [self._MANIFEST_NAME],
+                [f["rel"] for f in files if f["v"] == version],
             )
         except BaseException:
-            self.commit.discard_dir(path)
+            self.commit.io_delete_tree(path)
             raise
         return moved
 
@@ -3472,8 +3316,6 @@ class TableStore(TableFormat):
         version = self._claim_version(table)
         # one Spark job rewrites the affected files minus the doomed rows
         # (the anti key residual: NULL keys and non-matching keys survive)
-        from pyspark.sql import Observation
-
         kept = None
         kept_rows = 0
         obs = None
@@ -3582,8 +3424,6 @@ class TableStore(TableFormat):
         if not candidates:
             return v, {**report_base, "rows_deleted": 0, "noop": True}
         version = self._claim_version(table)
-        from pyspark.sql import Observation
-
         kept = None
         kept_rows = 0
         obs = None
@@ -3725,8 +3565,6 @@ class TableStore(TableFormat):
         stats = self.collect_file_stats(table, key_cols, version=entry["v"])
         all_rels = list(stats["files"])
         version = self._claim_version(table)
-        from pyspark.sql import Observation
-
         # cast updates to the TARGET's exact column types (snapshot taken
         # above, same read as target_cols): the new part files must carry
         # the same parquet physical types as the referenced ones (a
@@ -3771,8 +3609,8 @@ class TableStore(TableFormat):
             )
 
         def _check_constraints():
-            # runs inside _cow_commit, after the rewrite job, BEFORE
-            # publish: a violation aborts the staging and no version lands
+            # runs inside _cow_commit, after the rewrite job, BEFORE the
+            # commit marker: a violation aborts the commit, no version lands
             if cons_obs is not None:
                 bad = {k: n for k, n in cons_obs.get.items() if n}
                 if bad:
@@ -3877,9 +3715,8 @@ class TableStore(TableFormat):
     ) -> int:
         """Commit a METADATA-ONLY version: the manifest references every
         file of ``entry`` unchanged and records a new schema — zero data
-        movement, zero rewrite jobs, O(1) objects written. Marker-last
-        (put-if-absent) is atomic visibility on both commit impls because
-        the version holds no data objects; the pointer swap is
+        movement, zero rewrite jobs, O(1) objects written. Published
+        marker-last like every commit; the pointer swap is
         conflict-checked like any mutation. ``new_renames`` /
         ``new_retired`` / ``new_widened`` entries get their ``since``
         stamped with the claimed version (every file the new version
@@ -3914,17 +3751,7 @@ class TableStore(TableFormat):
             widened,
         )
         try:
-            self.commit.put_object(
-                os.path.join(path, self._MANIFEST_NAME), record
-            )
-            marker = json.dumps({"files": [self._MANIFEST_NAME], "n": 0}).encode()
-            if not self.commit.put_if_absent(
-                os.path.join(path, "_SUCCESS"), marker
-            ):
-                raise FileExistsError(
-                    f"commit marker already present at {path} — version "
-                    "already committed by another writer"
-                )
+            self._publish(path, record, [])
         except BaseException:
             self.commit.io_delete_tree(path)
             raise
@@ -4341,15 +4168,7 @@ class TableStore(TableFormat):
             base_man.get("widened", []),
         )
         try:
-            self.commit.put_object(
-                os.path.join(path, self._MANIFEST_NAME), record
-            )
-            smarker = json.dumps({"files": [self._MANIFEST_NAME], "n": 0}).encode()
-            if not self.commit.put_if_absent(os.path.join(path, "_SUCCESS"), smarker):
-                raise FileExistsError(
-                    f"commit marker already present at {path} — version "
-                    "already committed by another writer"
-                )
+            self._publish(path, record, [])
         except BaseException:
             self.commit.io_delete_tree(path)
             raise

@@ -8,11 +8,14 @@ TableStore's correctness needs exactly four primitives (VERDICT r8 #1):
    (``put_if_absent``: POSIX ``O_CREAT|O_EXCL``; object stores'
    conditional write — S3 ``If-None-Match: *``, GCS
    ``x-goog-if-generation-match: 0``).
-2. **publish a version directory** — all-or-nothing visibility of a
-   staged multi-file version (POSIX: atomic directory rename; object
-   stores have NO rename, so the conditional-put impl copies data
-   objects first and makes the version visible by writing its commit
-   marker — carrying a file MANIFEST — if-absent, LAST).
+2. **publish a version** — all-or-nothing visibility of a multi-file
+   version, the same on both impls: the writer puts every data object
+   directly under the FINAL ``vNNNN`` prefix (the data moves once, no
+   rename, no copy), and the version becomes visible only when its
+   commit marker — carrying the file MANIFEST — is written if-absent,
+   LAST (:meth:`StorageCommit.commit_direct`). A writer that dies
+   earlier leaves a marker-less prefix that readers never see and
+   vacuum sweeps once it is older than its TTL.
 3. **share an unchanged file into a new version** — since round 10
    this is a MANIFEST REFERENCE (the new version's ``_MANIFEST.json``
    lists the file against the version that physically wrote it): zero
@@ -29,8 +32,9 @@ TableStore's correctness needs exactly four primitives (VERDICT r8 #1):
 
 What each implementation ASSUMES of its storage:
 
-- :class:`PosixCommit`: POSIX/HDFS — O_EXCL create, atomic rename
-  (file and directory), hard links (degrades to copy cross-device).
+- :class:`PosixCommit`: POSIX/HDFS — O_EXCL create, atomic FILE
+  rename (single-object overwrite, sidecar publish), hard links
+  (degrades to copy cross-device).
 - :class:`ConditionalPutCommit`: an object store offering only
   (a) atomic single-object PUT (readers see the whole object or none —
   S3/GCS/Azure all guarantee this), (b) conditional PUT-if-absent,
@@ -128,32 +132,29 @@ class StorageCommit(ABC):
 
     _PTR = re.compile(r"ptr-(\d{12})\.json$")
 
-    #: When True the engine may let Spark write a version's files
-    #: DIRECTLY under the final version prefix and commit marker-last
-    #: (round 10, VERDICT r9 #4): data moves ONCE instead of
-    #: staging-then-copy. Only meaningful where publish_dir would
-    #: otherwise copy objects; the POSIX impl keeps the staged protocol
-    #: because its directory rename is atomic and free.
-    supports_direct_publish: bool = False
-
     def list_data_files(self, root: str) -> list[str]:
         """Relative paths of the ``.parquet`` objects under ``root``.
-        Used by direct publish to enumerate a job's own freshly-written
-        output; the caller VERIFIES completeness against an observed row
-        count before committing (a stale/torn listing must never
-        silently drop files from the manifest)."""
-        raise NotImplementedError
+        Used by publish to enumerate a job's own freshly-written output;
+        the caller VERIFIES completeness against an observed row count
+        before committing (a stale/torn listing must never silently drop
+        files from the manifest)."""
+        return sorted(
+            os.path.relpath(key, root)
+            for key in self.io_list_files(root)
+            if key.endswith(".parquet")
+        )
 
     def commit_direct(self, final: str, rels: list[str]) -> None:
-        """Marker-last commit of a directly-written version directory:
-        write the commit marker (carrying the file manifest) if-absent.
-        Raises FileExistsError when the version is already committed."""
-        raise NotImplementedError
-
-    def discard_dir(self, path: str) -> None:
-        """Remove an uncommitted (marker-less) version prefix — abort of
-        a direct publish, or residue sweep."""
-        raise NotImplementedError
+        """Marker-last commit of a version written under its final
+        prefix: write the commit marker (carrying the file manifest)
+        if-absent. Raises FileExistsError when the version is already
+        committed."""
+        marker = json.dumps({"files": sorted(rels), "n": len(rels)}).encode()
+        if not self.put_if_absent(os.path.join(final, "_SUCCESS"), marker):
+            raise FileExistsError(
+                f"commit marker already present at {final} — version already "
+                "committed by another writer (claim protocol violated?)"
+            )
 
     @abstractmethod
     def put_if_absent(self, path: str, data: bytes = b"") -> bool:
@@ -164,13 +165,6 @@ class StorageCommit(ABC):
     def put_object(self, path: str, data: bytes) -> None:
         """Atomic single-object overwrite: readers see the old bytes or
         the new bytes, never a torn object."""
-
-    @abstractmethod
-    def publish_dir(self, staging: str, final: str) -> None:
-        """Make a fully-staged version directory visible at ``final``.
-        All-or-nothing: until this returns, ``final`` must not look
-        committed (TableStore: committed == commit marker present); a
-        crash mid-publish leaves an uncommitted residue vacuum sweeps."""
 
     @abstractmethod
     def publish_file(self, src: str, dst: str) -> None:
@@ -346,9 +340,9 @@ class StorageCommit(ABC):
 
 
 class PosixCommit(StorageCommit):
-    """POSIX/HDFS semantics — the original TableStore protocol:
-    O_EXCL claims, atomic (directory) rename, hard links with a
-    cross-device copy fallback. The pointer swap is the SHARED
+    """POSIX/HDFS semantics: O_EXCL claims and commit markers, atomic
+    file rename for single-object overwrites and sidecar publishes, hard
+    links with a cross-device copy fallback. The pointer swap is the SHARED
     put-if-absent CAS log (round 10, over O_EXCL): concurrent swaps
     merge and ``expect_base`` conflict checks are linearizable — same
     assertions as the conditional-put impl, no POSIX caveat."""
@@ -385,9 +379,6 @@ class PosixCommit(StorageCommit):
             f.write(data)
         os.replace(tmp, path)
 
-    def publish_dir(self, staging: str, final: str) -> None:
-        os.rename(staging, final)  # atomic on POSIX; all-or-nothing
-
     def publish_file(self, src: str, dst: str) -> None:
         os.makedirs(os.path.dirname(dst), exist_ok=True)
         os.rename(src, dst)
@@ -406,13 +397,11 @@ class ConditionalPutCommit(StorageCommit):
     single-object PUT, conditional PUT-if-absent, GET, COPY, and an
     untrusted LIST. No renames, no hard links, no directory atomicity.
 
-    - ``publish_dir`` copies data objects into place and writes the
-      commit marker (``_SUCCESS``) LAST, if-absent, with the file
-      MANIFEST as its content — visibility is the marker, a torn list
-      of a committed version is repaired from the manifest, and a
-      writer dying mid-copy leaves marker-less residue that
-      history()/read() never see and vacuum sweeps (the exact POSIX
-      killed-writer invariant, without the rename).
+    - a version is published by the shared marker-last
+      :meth:`~StorageCommit.commit_direct` — visibility is the marker,
+      a torn list of a committed version is repaired from the manifest,
+      and a writer dying before the marker leaves marker-less residue
+      that history()/read() never see and vacuum sweeps.
     - ``write_pointer`` is the shared CAS log over the backend's
       conditional PUT (see :meth:`StorageCommit.write_pointer`):
       concurrent swaps MERGE, and readers take the highest listed entry
@@ -424,28 +413,8 @@ class ConditionalPutCommit(StorageCommit):
         self.backend = backend
         self.keep_log = keep_log
 
-    supports_direct_publish = True
-
     def put_if_absent(self, path: str, data: bytes = b"") -> bool:
         return self.backend.put_if_absent(path, data)
-
-    def list_data_files(self, root: str) -> list[str]:
-        return sorted(
-            os.path.relpath(key, root)
-            for key in self.backend.list_tree(root)
-            if key.endswith(".parquet")
-        )
-
-    def commit_direct(self, final: str, rels: list[str]) -> None:
-        marker = json.dumps({"files": sorted(rels), "n": len(rels)}).encode()
-        if not self.backend.put_if_absent(os.path.join(final, "_SUCCESS"), marker):
-            raise FileExistsError(
-                f"commit marker already present at {final} — version already "
-                "committed by another writer (claim protocol violated?)"
-            )
-
-    def discard_dir(self, path: str) -> None:
-        self.backend.delete_tree(path)
 
     # non-commit I/O routes through the backend (VERDICT r9 #3): the
     # data plane never touches the filesystem API directly, so the table
@@ -501,23 +470,6 @@ class ConditionalPutCommit(StorageCommit):
 
     def put_object(self, path: str, data: bytes) -> None:
         self.backend.put(path, data)
-
-    def publish_dir(self, staging: str, final: str) -> None:
-        rels = []
-        for key in sorted(self.backend.list_tree(staging)):
-            rel = os.path.relpath(key, staging)
-            if os.path.basename(rel) == "_SUCCESS":
-                continue  # the marker is written LAST, by us, if-absent
-            rels.append(rel)
-        for rel in rels:
-            self.backend.copy(os.path.join(staging, rel), os.path.join(final, rel))
-        marker = json.dumps({"files": rels, "n": len(rels)}).encode()
-        if not self.backend.put_if_absent(os.path.join(final, "_SUCCESS"), marker):
-            raise FileExistsError(
-                f"commit marker already present at {final} — version already "
-                "committed by another writer (claim protocol violated?)"
-            )
-        self.backend.delete_tree(staging)
 
     def publish_file(self, src: str, dst: str) -> None:
         self.backend.copy(src, dst)  # single-object PUT: atomic to readers

@@ -726,8 +726,8 @@ def lifecycle_cow_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders land clustered on o_orderkey; the update batch reprices the
     100 SMALLEST keys (clustered into the low files) and inserts the same
     keys offset by 10^9 (all-new keyspace). ``merge_in`` must rewrite
-    fewer files than the version holds, hard-link at least one untouched
-    file, replace exactly 100 target rows while writing all 200 update
+    fewer files than the version holds, keep at least one untouched file
+    by manifest reference, replace exactly 100 target rows while writing all 200 update
     rows, and equal ``merge_upsert``'s anti-join form row-for-row
     (checked in-entry). The merged table hashes against the UNION oracle."""
     orders = T(spark, sf_dir, "orders").select(
@@ -771,7 +771,7 @@ def lifecycle_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     (round 8): orders land date-clustered, then a 7-month retention sweep
     (``delete_where`` on the order date) must rewrite ONLY the files whose
     stats interval intersects the window (fewer than the version holds,
-    at least one hard-linked with a shared inode), delete exactly the
+    at least one kept by manifest reference), delete exactly the
     window's rows, and leave an out-of-domain sweep as a version-free
     no-op. Survivors hash against the NOT-BETWEEN oracle."""
     import datetime as dt
@@ -845,7 +845,7 @@ def lifecycle_cow_merge_composite(spark: SparkSession, sf_dir: str) -> DataFrame
     (orderkey, linenumber) pairs and re-inserts them offset into an
     all-new keyspace. ``merge_in`` with a key LIST must prune with
     intersected per-column stats (rewriting fewer files than the version
-    holds, hard-linking at least one), replace exactly 100 target rows
+    holds, keeping at least one by reference), replace exactly 100 target rows
     while writing all 200 update rows, and equal ``merge_upsert``'s
     anti-join form row-for-row. The merged table hashes against the
     EXISTS-split oracle."""
@@ -945,9 +945,9 @@ def lifecycle_cow_delete_partitioned(spark: SparkSession, sf_dir: str) -> DataFr
     partition dir; the five smallest custkeys are deleted via
     ``delete_in``. Hard invariants: the delete rewrites only the files
     whose custkey range holds a doomed key (fewer than the version
-    holds), every untouched PARTITION file hard-links at its exact
-    partition-prefixed relative path (same inode — checked by a
-    recursive walk), exactly 5 rows die, and the pre-delete version
+    holds), every untouched PARTITION file is a manifest reference at
+    its exact partition-prefixed relative path (checked against both
+    versions' manifests), exactly 5 rows die, and the pre-delete version
     stays pinned-readable. Survivors hash against the anti-IN oracle."""
     import os as _os
 
@@ -1031,7 +1031,8 @@ def lifecycle_metadata_delete_gate(spark: SparkSession, sf_dir: str) -> DataFram
     row dies, so its files are DROPPED from the new version
     (``files_dropped >= 1``, ``files_rewritten == 0``,
     ``rewrite_output_files == 0``) while every other partition file
-    hard-links (inode-checked). Delta's partition-predicate metadata
+    stays a manifest reference to its old version (checked against the
+    manifests). Delta's partition-predicate metadata
     DELETE, grading the round-9 ``_stat_dooms`` path end-to-end. The
     pre-delete version stays pinned-readable; survivors hash against the
     ``<>`` oracle."""

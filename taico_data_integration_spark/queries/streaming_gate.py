@@ -411,7 +411,7 @@ def stream_cow_merge_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
        offset into an all-new keyspace;
     2. each batch must commit exactly one version, ``last_txn == 1``;
     3. COPY-ON-WRITE asserted physically: the two batch versions share at
-       least one hard-linked file (same inode) with their predecessors —
+       least one file with their predecessors by manifest reference —
        a silent fallback to the full-rewrite merge shares nothing and
        fails the gate;
     4. REPLAY: a fresh checkpoint redelivers every arrival as batch 0;

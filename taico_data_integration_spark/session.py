@@ -84,12 +84,3 @@ def get_spark(app_name: str = "taico-spark", shuffle_partitions: str | None = No
     )
     return builder.getOrCreate()
 
-
-def tune_for_scale(spark: SparkSession, target_partition_bytes: int = 128 * 1024 * 1024) -> None:
-    """Confs we would set on the 1000-executor/100 TB profile.
-
-    Documented here (and applied where runtime-settable) so the local plans
-    match the cluster plans structurally.
-    """
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(target_partition_bytes))
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", str(64 * 1024 * 1024))

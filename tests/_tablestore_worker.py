@@ -1,8 +1,8 @@
 """Subprocess workers for the TableStore cross-PROCESS concurrency tests
 (VERDICT r5 #2). The r5 race tests ran threads in one interpreter; these
 workers are launched as real OS processes so the O_CREAT|O_EXCL claim, the
-_SUCCESS commit gate and the os.replace pointer swap are exercised across
-process boundaries — the semantics they were designed for.
+marker-last _SUCCESS commit gate and the O_EXCL pointer-log swap are
+exercised across process boundaries — the semantics they were designed for.
 
 Modes (dispatched on argv[1]):
 

@@ -790,8 +790,8 @@ def test_tablestore_cross_process_promote_race(spark, tmp_path):
     """VERDICT r5 #2: the r5 race test ran threads in ONE interpreter; this
     one runs two REAL OS processes, each with its own SparkSession/JVM,
     promoting the same table of one shared TableStore root concurrently.
-    The O_CREAT|O_EXCL claim, _SUCCESS commit gate and os.replace pointer
-    swap are OS-level primitives — this is the boundary they were designed
+    The O_CREAT|O_EXCL claim, the marker-last _SUCCESS commit gate and
+    the O_EXCL pointer-log swap are OS-level primitives — this is the boundary they were designed
     for. Same assertions as the thread test: both promotes succeed with
     DISTINCT versions, history complete and clean, exactly one current,
     both versions readable by pin."""
@@ -881,6 +881,36 @@ def test_tablestore_sigkilled_process_ghost_swept(spark, tmp_path):
     store.vacuum("t", keep_latest=2, stage_ttl_seconds=0.0)
     assert not os.path.isdir(ghost)
     assert store.read("t").count() == 1
+
+
+def test_posix_commit_writes_final_prefix_marker_last(spark, tmp_path):
+    """The default PosixCommit publishes like every commit impl: Spark
+    writes under the final vNNNN prefix, which stays marker-less and out
+    of history() until the listing is verified and the marker written —
+    no dot-named staging dir exists at any point, for a full write or a
+    COW rewrite."""
+    seen = []
+
+    class Spy(TableStore):
+        def _verified_direct_rels(self, final, expected_rows):
+            tdir = os.path.dirname(final)
+            seen.append((
+                os.path.basename(final),
+                sorted(n for n in os.listdir(tdir) if n.startswith((".", "v"))),
+                os.path.exists(os.path.join(final, "_SUCCESS")),
+                [h["v"] for h in self.history("t")],
+            ))
+            return super()._verified_direct_rels(final, expected_rows)
+
+    store = Spy(spark, str(tmp_path))
+    store.write("t", spark.range(0, 1000).repartition(2))
+    store.delete_in("t", "id", [7])
+    assert seen == [
+        ("v0000", ["v0000"], False, []),
+        ("v0001", ["v0000", "v0001"], False, [0]),
+    ]
+    assert [h["v"] for h in store.history("t")] == [1, 0]
+    assert store.read("t").count() == 999
 
 
 def test_sqlwarehouse_drop_namespace_sweeps_orphans(spark, tmp_path):
@@ -1022,29 +1052,6 @@ def test_vacuum_markerless_sweep_ages_by_deep_mtime(spark, tmp_path):
     _os.utime(fresh, (old, old))
     store.vacuum("t", keep_latest=1, stage_ttl_seconds=3600.0)
     assert not _os.path.exists(orphan), "expired orphan survived"
-
-
-def test_tablestore_vacuum_protects_live_staging(spark, tmp_path):
-    """vacuum must never reap a LIVE writer's staging dir (between job
-    completion and the validate+rename) — only stages older than the TTL,
-    the same retention-window discipline as Delta VACUUM."""
-    import os
-    import time as _time
-
-    from taico_data_integration_spark.ops.incremental import TableStore
-
-    store = TableStore(spark, str(tmp_path))
-    store.write("t", spark.range(3))
-    store.write("t", spark.range(4))
-    tdir = str(tmp_path / "t")
-    live = os.path.join(tdir, ".stage-v0099")
-    os.makedirs(live)
-    store.vacuum("t", keep_latest=1)
-    assert os.path.isdir(live), "live staging dir was reaped"
-    old = _time.time() - 7200
-    os.utime(live, (old, old))
-    store.vacuum("t", keep_latest=1)
-    assert not os.path.isdir(live), "expired staging dir survived"
 
 
 def test_tablestore_vacuum_retention_window(spark, tmp_path):
@@ -2789,9 +2796,16 @@ def test_delete_in_copy_on_write(spark, tmp_path):
     fm1 = store._version_filemap("t", {"v": v1, "path": v1_path})
     shared = [rel for rel, vp in fm1.items() if vp == v0]
     assert len(shared) == rep["files_linked"] > 0
-    phys = [f for f in _os.listdir(v1_path) if f.endswith(".parquet")]
+    phys = {
+        _os.path.relpath(_os.path.join(dp, f), v1_path)
+        for dp, _d, fs in _os.walk(v1_path)
+        for f in fs
+        if f.endswith(".parquet")
+    }
     assert len(phys) == rep["rewrite_output_files"]
-    assert all(f.startswith(f"rewrite-{v1:04d}-") for f in phys)
+    # every physical file is one of v1's own manifest entries and vice
+    # versa: no stray output, no unlisted file
+    assert phys == {rel for rel, vp in fm1.items() if vp == v1}
 
     # old version still pinned-readable; vacuum it and the links survive
     assert store.read("t", version=v0).count() == n0
@@ -2919,7 +2933,7 @@ def test_merge_in_enforces_check_constraints(spark, tmp_path):
     write() does — otherwise the COW fast path lets violating update rows
     land in a committed version whenever the batch qualifies for it,
     while the same stream's fallback batches (full merge through write())
-    abort. A violating batch aborts with no visible version, no staging
+    abort. A violating batch aborts with no visible version, no uncommitted
     residue, and no txn record; a clean batch then commits normally."""
     import os as _os
 
@@ -2935,13 +2949,14 @@ def test_merge_in_enforces_check_constraints(spark, tmp_path):
     bad = spark.createDataFrame([(3, -1.0), (10**7, 5.0)], "k bigint, val double")
     with pytest.raises(ValueError, match="constraint violation"):
         store.merge_in("t", bad, "k")
-    # table unchanged, no new version visible, no staging residue
+    # table unchanged, no new version visible, no uncommitted residue:
+    # the aborted version's prefix was deleted, not left marker-less
     assert store._read_meta("t")["current"] == v0
     assert store.read("t").exceptAll(before).count() == 0
-    assert not [
+    assert {
         d for d in _os.listdir(_os.path.join(str(tmp_path), "t"))
-        if d.startswith(".stage-")
-    ]
+        if d.startswith((".", "v"))
+    } == {f"v{e['v']:04d}" for e in store.history("t")}
 
     # the txn path inherits the abort: the batch id is NOT recorded, so a
     # corrected redelivery of the same batch id is applied, not skipped
@@ -4288,7 +4303,7 @@ def test_default_survives_no_rewrite_cow_commit(spark, tmp_path):
 def test_vacuum_dry_run_reports_without_removing(spark, tmp_path):
     """Rounds 11+12: vacuum(dry_run=True) returns a STRUCTURED report of
     everything a real pass would do — version removals AND the residue
-    sweep (tombstones, orphans, stages), where the surprising deletions
+    sweep (tombstones, orphans), where the surprising deletions
     live (VERDICT r11 #6) — and touches nothing; the real pass executes
     exactly that plan."""
     import os as _os
@@ -4299,32 +4314,27 @@ def test_vacuum_dry_run_reports_without_removing(spark, tmp_path):
     store = TableStore(spark, str(tmp_path))
     for i in range(4):
         store.write("t", spark.range(10 + i))
-    # plant residue: an aged crashed-writer stage dir and an aged
-    # marker-less orphan version dir
-    stage = str(tmp_path / "t" / ".stage-v0099")
-    _os.makedirs(stage)
-    open(_os.path.join(stage, "part-dead.parquet"), "wb").close()
+    # plant residue: an aged marker-less orphan version dir (a crashed
+    # writer's output)
     orphan = str(tmp_path / "t" / "v0098")
     _os.makedirs(orphan)
     open(_os.path.join(orphan, "part-dead.parquet"), "wb").close()
     old = _time.time() - 7200
-    for p in (stage, orphan, _os.path.join(stage, "part-dead.parquet"),
-              _os.path.join(orphan, "part-dead.parquet")):
+    for p in (orphan, _os.path.join(orphan, "part-dead.parquet")):
         _os.utime(p, (old, old))
 
     would = store.vacuum("t", keep_latest=1, dry_run=True)
     assert would["versions"] == [0, 1, 2]
     assert would["tombstoned"] == []  # full rewrites: nothing shared
     assert would["orphans"] == [orphan]
-    assert would["stages"] == [stage]
     assert would["tombstones_swept"] == []
     # dry run touched NOTHING
     assert [e["v"] for e in store.history("t")] == [3, 2, 1, 0]
     assert store.read("t", version=0).count() == 10  # still readable
-    assert _os.path.exists(stage) and _os.path.exists(orphan)
+    assert _os.path.exists(orphan)
     # the real pass executes exactly that plan
     assert store.vacuum("t", keep_latest=1) == would["versions"]
-    assert not _os.path.exists(stage) and not _os.path.exists(orphan)
+    assert not _os.path.exists(orphan)
 
     # share-by-reference store: a dry run reports the tombstoned subset
     store2 = TableStore(spark, str(tmp_path / "s2"))

@@ -4,7 +4,7 @@ Proves the SAME TableStore protocol holds on POSIX semantics and on
 object-store (conditional-put) semantics:
 
 - protocol-level races against the fault-injecting in-memory fake:
-  duplicate claims, writer death mid-publish (lost 'rename'), torn
+  duplicate claims, writer death before the commit marker, torn
   listings — no lost commit, no torn commit, ever;
 - the full TableStore (real Spark writes) end-to-end through
   ConditionalPutCommit on the local emulated backend: versioned writes,
@@ -64,23 +64,32 @@ def test_put_if_absent_exactly_one_winner(commit, tmp_path):
     assert len(wins) == 1
 
 
-def test_publish_dir_all_or_nothing(commit, tmp_path):
-    """A published directory is visible with its commit marker and every
-    data file; before publish, the final path has no marker."""
-    staging = str(tmp_path / ".stage-v0001")
+def test_commit_direct_marker_last(commit, tmp_path):
+    """The one publish protocol on both impls: data files are written
+    straight under the final prefix and stay invisible (no marker) until
+    ``commit_direct`` writes the manifest-carrying marker if-absent; a
+    second commit of the same version is refused."""
     final = str(tmp_path / "v0001")
-    os.makedirs(staging)
-    for name in ("part-0.parquet", "part-1.parquet"):
-        with open(os.path.join(staging, name), "wb") as f:
-            f.write(name.encode() * 100)
-    open(os.path.join(staging, "_SUCCESS"), "w").close()
+    rels = ["part-0.parquet", os.path.join("tenant=1", "part-1.parquet")]
+    for rel in rels:
+        os.makedirs(os.path.dirname(os.path.join(final, rel)), exist_ok=True)
+        with open(os.path.join(final, rel), "wb") as f:
+            f.write(rel.encode() * 100)
+    with open(os.path.join(final, "_MANIFEST.json"), "wb") as f:
+        f.write(b"{}")  # not a data file: never listed
     assert not os.path.exists(os.path.join(final, "_SUCCESS"))
-    commit.publish_dir(staging, final)
-    assert os.path.exists(os.path.join(final, "_SUCCESS"))
-    for name in ("part-0.parquet", "part-1.parquet"):
-        with open(os.path.join(final, name), "rb") as f:
-            assert f.read() == name.encode() * 100
-    assert not os.path.exists(staging)  # staging consumed either way
+    assert commit.list_data_files(final) == sorted(rels)
+    commit.commit_direct(final, rels)
+    with open(os.path.join(final, "_SUCCESS"), "rb") as f:
+        marker = json.loads(f.read())
+    assert marker == {"files": sorted(rels), "n": 2}
+    for rel in rels:
+        with open(os.path.join(final, rel), "rb") as f:
+            assert f.read() == rel.encode() * 100
+    with pytest.raises(FileExistsError, match="already committed"):
+        commit.commit_direct(final, rels)
+    with open(os.path.join(final, "_SUCCESS"), "rb") as f:
+        assert json.loads(f.read()) == marker  # the first commit stands
 
 
 def test_pointer_swap_and_txn_merge(commit, tmp_path):
@@ -174,27 +183,31 @@ def test_fake_duplicate_claims_one_winner():
     assert len(wins) == 1
 
 
+def _write_then_commit(be, commit, final, payloads):
+    """The writer side of the publish protocol: data objects go straight
+    under the final prefix, the marker is written last."""
+    for i, data in enumerate(payloads):
+        be.put(f"{final}/part-{i}.parquet", data)
+    commit.commit_direct(final, commit.list_data_files(final))
+
+
 def test_fake_writer_death_mid_publish_leaves_no_torn_commit():
-    """A writer that dies mid-publish_dir (injected) leaves data objects
-    but NO commit marker: the version is invisible to the
-    marker-is-visibility reader, and a retry under a fresh claim
-    publishes cleanly — the lost-rename scenario, no torn commit."""
+    """A writer that dies mid-publish (injected, after 2 of its 3 data
+    objects, before the marker) leaves data objects but NO commit
+    marker: the version is invisible to the marker-is-visibility reader,
+    and a retry under a fresh claim publishes cleanly — no torn
+    commit."""
     be, commit = _fake_commit()
-    # stage 3 files
-    for i in range(3):
-        be.put(f"/t/.stage-v0001/part-{i}.parquet", b"x" * 64)
-    be.put("/t/.stage-v0001/_SUCCESS", b"")
-    be.die_after_puts = 2  # dies after copying 2 of 3 data objects
+    be.die_after_puts = 2  # dies after putting 2 of 3 data objects
     with pytest.raises(RuntimeError, match="injected writer death"):
-        commit.publish_dir("/t/.stage-v0001", "/t/v0001")
+        _write_then_commit(be, commit, "/t/v0001", [b"x" * 64] * 3)
     assert be.get("/t/v0001/_SUCCESS") is None  # invisible: no marker
+    assert len(commit.list_data_files("/t/v0001")) == 2  # residue only
     # the crashed writer's residue is sweepable; a NEW claim + publish
     # (vacuum would remove the residue; marker write is if-absent so the
     # retry must use a fresh version dir, exactly the claim protocol)
     be.die_after_puts = None
-    for i in range(3):
-        be.put(f"/t/.stage-v0002/part-{i}.parquet", b"y" * 64)
-    commit.publish_dir("/t/.stage-v0002", "/t/v0002")
+    _write_then_commit(be, commit, "/t/v0002", [b"y" * 64] * 3)
     marker = json.loads(be.get("/t/v0002/_SUCCESS"))
     assert marker["n"] == 3 and len(marker["files"]) == 3
     for rel in marker["files"]:
@@ -207,9 +220,9 @@ def test_fake_torn_list_never_tears_a_commit():
     (read-after-write GET), and the pointer resolves to a consistent —
     at worst stale, never torn — record."""
     be, commit = _fake_commit()
-    for i in range(4):
-        be.put(f"/t/.stage-v0001/part-{i}.parquet", f"data-{i}".encode())
-    commit.publish_dir("/t/.stage-v0001", "/t/v0001")
+    _write_then_commit(
+        be, commit, "/t/v0001", [f"data-{i}".encode() for i in range(4)]
+    )
     commit.write_pointer("/t", lambda prev: {"current": 0, "txns": {}})
     commit.write_pointer("/t", lambda prev: {"current": 1, "txns": {"a": 3}})
 
@@ -570,17 +583,17 @@ def test_direct_publish_aborts_on_torn_own_listing(spark, tmp_path):
     assert store.read("t").count() == 1000
 
 
-def test_direct_publish_constraint_violation_discards_prefix(spark, tmp_path):
-    """A constraint-violating direct write discards the final prefix
-    entirely — marker-less residue never becomes visible and the claimed
-    number is burned, exactly the staged protocol's invariant."""
+def test_direct_publish_constraint_violation_discards_prefix(
+    commit, spark, tmp_path
+):
+    """A constraint-violating write discards the final prefix entirely on
+    both impls — marker-less residue never becomes visible and the
+    claimed number is burned."""
     import os as _os
 
     from taico_data_integration_spark.ops.incremental import TableStore
 
-    store = TableStore(
-        spark, str(tmp_path), commit=ConditionalPutCommit(LocalEmulatedBackend())
-    )
+    store = TableStore(spark, str(tmp_path), commit=commit)
     store.write("t", spark.range(10).selectExpr("id AS k"))
     store.set_constraint("t", "k_small", "k < 100")
     with pytest.raises(ValueError, match="constraint violation"):
