@@ -466,12 +466,13 @@ class TableStore(TableFormat):
         start at base+1, so the number spaces never collide); everything
         else is the table's own version dir. Every DATA access by
         (table, physical version) must resolve through here — version
-        CREATION keeps using :meth:`_version_dir` (new versions are
-        always local)."""
+        CREATION uses :meth:`_version_dir` directly (new versions are
+        always local), the one definition of the ``vNNNN`` layout both
+        resolve to."""
         cl = self._clone_info(table)
         if cl is not None and vphys <= cl["base"]:
-            return os.path.join(self.root, cl["of"], f"v{vphys:04d}")
-        return os.path.join(self.root, table, f"v{vphys:04d}")
+            return self._version_dir(cl["of"], vphys)
+        return self._version_dir(table, vphys)
 
     def _clone_dependents(self, table: str) -> list[tuple[str, int]]:
         """Every live shallow clone of ``table`` in this store, as
@@ -965,28 +966,13 @@ class TableStore(TableFormat):
         from ..catalog import ensure_runtime_confs
 
         ensure_runtime_confs(df.sparkSession)
-        cons = self.constraints(table)
-        obs = None
-        if cons:
-            # constraints ride the write job itself (Observation — zero
-            # extra scans at any size); NULL check results count as
-            # violations: CHECK must HOLD, mirroring Delta
-            obs = Observation(f"constraints_{table}")
-            df = df.observe(
-                obs,
-                *[
-                    F.sum(
-                        F.when(F.expr(expr).eqNullSafe(F.lit(True)), 0).otherwise(1)
-                    ).alias(name)
-                    for name, expr in cons.items()
-                ],
-            )
+        df, check_constraints = self._observe_constraints(table, df)
         # the Observation row count is what PROVES the post-job listing
         # complete before it becomes the commit manifest
         row_obs = Observation(f"rows_{table}_{time.time_ns()}")
         df = df.observe(row_obs, F.count(F.lit(1)).alias("n"))
         version = self._claim_version(table)
-        path = os.path.join(self.root, table, f"v{version:04d}")
+        path = self._version_dir(table, version)
         # Spark writes UNDER THE FINAL PREFIX: the version becomes visible
         # only when the manifest-carrying marker is written LAST, after
         # validation, so a constraint-violating write is never observable
@@ -1001,13 +987,7 @@ class TableStore(TableFormat):
             writer = writer.partitionBy(*partition_by)
         try:
             writer.parquet(path)
-            if obs is not None:
-                bad = {k: v for k, v in obs.get.items() if v}
-                if bad:
-                    detail = ", ".join(
-                        f"{k} ({bad[k]} rows violate: {cons[k]})" for k in bad
-                    )
-                    raise ValueError(f"constraint violation on {table}: {detail}")
+            check_constraints()
             # share-by-reference manifest: a full write owns every file it
             # wrote (all self-references). The recorded schema is in
             # READ-BACK column order (partition columns last, declared
@@ -1031,6 +1011,37 @@ class TableStore(TableFormat):
             raise
         self._write_pointer(table, version, txn=_txn, expect_base=_expect_base)
         return version
+
+    def _observe_constraints(self, table: str, df: DataFrame):
+        """The table's CHECK constraints as an Observation riding the
+        caller's own write job (zero extra scans at any size). Returns
+        ``(observed_df, raise_if_violated)``: call the latter after the job
+        and BEFORE the commit marker, so a violating version never lands.
+        NULL check results count as violations: CHECK must HOLD, mirroring
+        Delta."""
+        cons = self.constraints(table)
+        if not cons:
+            return df, lambda: None
+        obs = Observation(f"constraints_{table}_{time.time_ns()}")
+        df = df.observe(
+            obs,
+            *[
+                F.sum(
+                    F.when(F.expr(expr).eqNullSafe(F.lit(True)), 0).otherwise(1)
+                ).alias(c)
+                for c, expr in cons.items()
+            ],
+        )
+
+        def raise_if_violated() -> None:
+            bad = {k: n for k, n in obs.get.items() if n}
+            if bad:
+                detail = ", ".join(
+                    f"{k} ({bad[k]} rows violate: {cons[k]})" for k in bad
+                )
+                raise ValueError(f"constraint violation on {table}: {detail}")
+
+        return df, raise_if_violated
 
     @staticmethod
     def _fs_safe_name(raw: str) -> str:
@@ -1441,6 +1452,12 @@ class TableStore(TableFormat):
                 # parquet DIRECTORY — io_delete_tree handles both
                 self.commit.io_delete_tree(mp)
 
+        def _delete_part(fpath: str) -> None:
+            # a part file and Spark's hidden checksum sibling of it
+            head, name = os.path.split(fpath)
+            for f in (fpath, os.path.join(head, f".{name}.crc")):
+                self.commit.io_delete(f)
+
         for vp in ver_plans:
             if vp["still_needed"]:
                 # tombstone: the version leaves history, its referenced
@@ -1454,14 +1471,14 @@ class TableStore(TableFormat):
                     self.commit.io_delete(os.path.join(vp["path"], name))
                 for rel in vp["own"]:
                     if rel not in vp["still_needed"]:
-                        self.commit.io_delete(os.path.join(vp["path"], rel))
+                        _delete_part(os.path.join(vp["path"], rel))
             else:
                 self.commit.io_delete_tree(vp["path"])
             removed.append(vp["v"])
             _drop_sidecars(vp["v"])
         for tp in tomb_plans:
             for fpath in tp["dead"]:
-                self.commit.io_delete(fpath)
+                _delete_part(fpath)
             if tp["reclaimed"]:
                 self.commit.io_delete_tree(tp["path"])
         for p in orphan_dirs:
@@ -2247,6 +2264,30 @@ class TableStore(TableFormat):
         num_hashes = max(1, round(num_bits / expected_items * math.log(2)))
         return num_bits, min(16, num_hashes)
 
+    def _publish_sidecar_parts(self, df: DataFrame, bp: str, tag: str) -> None:
+        """Add ``df``'s rows to the bloom sidecar dir ``bp`` as new part
+        files named ``<tag>-<nonce>-<part>``. Each job writes to its OWN
+        staging dir ``<bp>.<tag>-<nonce>``, then publishes the completed
+        part files into the sidecar. A direct mode=append of two concurrent
+        jobs shares Hadoop's _temporary/0 staging under the output dir —
+        the first job commit deletes the second job's in-flight task files
+        (found by test; the classic FileOutputCommitter limitation).
+        Private staging + per-file publish keeps concurrent different-column
+        builds safe: readers only ever see completed files."""
+        nonce = f"{os.getpid()}-{time.time_ns()}"
+        stage = f"{bp}.{tag}-{nonce}"
+        try:
+            df.write.mode("overwrite").parquet(stage)
+            self.commit.io_mkdirs(bp)
+            for name in self.commit.io_list_dir(stage):
+                if name.endswith(".parquet"):
+                    self.commit.publish_file(
+                        os.path.join(stage, name),
+                        os.path.join(bp, f"{tag}-{nonce}-{name}"),
+                    )
+        finally:
+            self.commit.io_delete_tree(stage)
+
     def collect_file_blooms(
         self,
         table: str,
@@ -2394,22 +2435,10 @@ class TableStore(TableFormat):
                     & (F.col("m") == num_bits)
                     & (F.col("k") == num_hashes)
                 )
-                nonce = f"{os.getpid()}-{time.time_ns()}"
-                copy_dir = f"{bp}.reuse-{nonce}"
-                try:
-                    # no coalesce: at large file counts the copied rows
-                    # are (files x m/8) bytes — let the scan's own split
-                    # parallelism carry them
-                    src.write.mode("overwrite").parquet(copy_dir)
-                    self.commit.io_mkdirs(bp)
-                    for name in self.commit.io_list_dir(copy_dir):
-                        if name.endswith(".parquet"):
-                            self.commit.publish_file(
-                                os.path.join(copy_dir, name),
-                                os.path.join(bp, f"reuse-{nonce}-{name}"),
-                            )
-                finally:
-                    self.commit.io_delete_tree(copy_dir)
+                # no coalesce: at large file counts the copied rows are
+                # (files x m/8) bytes — let the scan's own split
+                # parallelism carry them
+                self._publish_sidecar_parts(src, bp, "reuse")
                 for c, rels in take.items():
                     reused.setdefault(c, set()).update(rels)
                     uncovered[c] -= set(rels)
@@ -2508,28 +2537,8 @@ class TableStore(TableFormat):
                 if sel is not None
                 else None
             )
-            # each build job writes to its OWN staging dir, then renames the
-            # completed part files into the sidecar. A direct mode=append of
-            # two concurrent jobs shares Hadoop's _temporary/0 staging under
-            # the output dir — the first job commit deletes the second job's
-            # in-flight task files (found by test; the classic
-            # FileOutputCommitter limitation). Private staging + per-file
-            # rename keeps concurrent different-column builds safe: readers
-            # only ever see completed files.
             if packed is not None:
-                nonce = f"{os.getpid()}-{time.time_ns()}"
-                build_dir = f"{bp}.build-{nonce}"
-                try:
-                    packed.write.mode("overwrite").parquet(build_dir)
-                    self.commit.io_mkdirs(bp)
-                    for name in self.commit.io_list_dir(build_dir):
-                        if name.endswith(".parquet"):
-                            self.commit.publish_file(
-                                os.path.join(build_dir, name),
-                                os.path.join(bp, f"build-{nonce}-{name}"),
-                            )
-                finally:
-                    self.commit.io_delete_tree(build_dir)
+                self._publish_sidecar_parts(packed, bp, "build")
 
         manifest: dict = {
             "cols": {},
@@ -3175,7 +3184,7 @@ class TableStore(TableFormat):
                 ]
             )
         schema_json = sch.json()
-        path = os.path.join(self.root, table, f"v{version:04d}")
+        path = self._version_dir(table, version)
         affected_set = set(affected)
         files = [
             {"rel": rel, "v": filemap[rel]}
@@ -3593,35 +3602,13 @@ class TableStore(TableFormat):
         # merge (write path), letting violating rows land depending on
         # batch key count/layout. Kept rows re-validate for free (they
         # passed at their own commit), so violations can only come from
-        # the update batch.
-        cons = self.constraints(table)
-        cons_obs = None
-        if cons:
-            cons_obs = Observation(f"merge_in_constraints_{table}_{version}")
-            out = out.observe(
-                cons_obs,
-                *[
-                    F.sum(
-                        F.when(F.expr(expr).eqNullSafe(F.lit(True)), 0).otherwise(1)
-                    ).alias(name)
-                    for name, expr in cons.items()
-                ],
-            )
-
-        def _check_constraints():
-            # runs inside _cow_commit, after the rewrite job, BEFORE the
-            # commit marker: a violation aborts the commit, no version lands
-            if cons_obs is not None:
-                bad = {k: n for k, n in cons_obs.get.items() if n}
-                if bad:
-                    detail = ", ".join(
-                        f"{k} ({bad[k]} rows violate: {cons[k]})" for k in bad
-                    )
-                    raise ValueError(f"constraint violation on {table}: {detail}")
-
+        # the update batch. The check runs inside _cow_commit, after the
+        # rewrite job, BEFORE the commit marker: a violation aborts the
+        # commit, no version lands.
+        out, check_constraints = self._observe_constraints(table, out)
         moved = self._cow_commit(
             table, entry, all_rels, affected, out, version,
-            after_write=_check_constraints,
+            after_write=check_constraints,
         )
         out_rows = obs.get["out_rows"]
         before_affected = sum(
@@ -3726,7 +3713,7 @@ class TableStore(TableFormat):
         generations keep their old directory layout and read through the
         per-generation union path."""
         version = self._claim_version(table)
-        path = os.path.join(self.root, table, f"v{version:04d}")
+        path = self._version_dir(table, version)
         fm = self._version_filemap(table, entry)
         if new_partition_by is not None:
             pcols = list(new_partition_by)
@@ -4158,7 +4145,7 @@ class TableStore(TableFormat):
         pcols = self._recorded_partition_by(src, entry)
         base_man = self._manifest(src, entry)
         version = self._claim_version(dst)
-        path = os.path.join(ddir, f"v{version:04d}")
+        path = self._version_dir(dst, version)
         record = self._manifest_record(
             [{"rel": rel, "v": v} for rel, v in fm.items()],
             pcols,

@@ -4,10 +4,11 @@ Reference flow (dags/etl.py:118-190): per dimension column — staging table
 rebuild, distinct extract from the warehouse, row-at-a-time NOT-EXISTS
 insert + delete-missing sweep into Postgres, validation, then the
 media-combinations bridge rebuild. Here: per dimension — distinct extract
--> mirror sync against the stored dim (one anti-join each way, id-stable)
--> single-pass validation -> versioned write; then one declarative bridge
-rebuild (M7). Zero driver-side loops over rows; the only Python loop is
-over the handful of dimension NAMES.
+-> mirror sync against the stored dim (one anti-join each way, id-stable);
+each synced dim and then the bridge (M7) is a ModelDAG model, written once
+to the versioned store and checked and validated over its written version.
+Zero driver-side loops over rows; the only Python loop is over the handful
+of dimension NAMES.
 """
 
 from __future__ import annotations
@@ -15,12 +16,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..checks.engine import run_checks
 from ..checks.suites import dimension_suite
 from ..ops.dims import distinct_extract, mint_ids, mirror_sync, validate_sync
 from ..ops.formats import TableFormat
 from ..ops.incremental import TableStore
 from ..ops.relations import rebuild_relations
+from .model_dag import Model, ModelDAG
 
 
 def sync_dimension(
@@ -30,21 +31,19 @@ def sync_dimension(
     company_id: int,
 ) -> DataFrame:
     """M2 mirror sync with stable ids: keep matching rows, mint new ids above
-    the current max for new names, drop names absent from the source."""
-    if store.exists(table):
-        existing = store.read(table)
-        kept, added = mirror_sync(existing, incoming_names, ["name"])
-        start = (existing.agg(F.max("id")).collect()[0][0] or 0) + 1
-        minted = mint_ids(added.select("name"), ["name"], start_at=start).withColumn(
-            "company_id", F.lit(company_id)
-        )
-        synced = kept.unionByName(minted.select("id", "name", "company_id"))
-    else:
-        synced = mint_ids(incoming_names.select("name"), ["name"]).withColumn(
+    the current max for new names, drop names absent from the source.
+    Returns the synced frame; the caller writes it."""
+    if not store.exists(table):
+        return mint_ids(incoming_names.select("name"), ["name"]).withColumn(
             "company_id", F.lit(company_id)
         ).select("id", "name", "company_id")
-    store.write(table, synced)
-    return store.read(table)
+    existing = store.read(table)
+    kept, added = mirror_sync(existing, incoming_names, ["name"])
+    start = (existing.agg(F.max("id")).collect()[0][0] or 0) + 1
+    minted = mint_ids(added.select("name"), ["name"], start_at=start).withColumn(
+        "company_id", F.lit(company_id)
+    )
+    return kept.unionByName(minted.select("id", "name", "company_id"))
 
 
 def run_etl_pipeline(
@@ -61,33 +60,42 @@ def run_etl_pipeline(
     ``callbacks`` (pipelines.callbacks.PipelineCallbacks) receives the run
     summary via on_success/on_failure — the S15 notification seam."""
     store = TableStore(spark, store_root)
-    results: dict[str, object] = {}
-    dims: dict[str, DataFrame] = {}
-
-    for col in dim_columns:
-        incoming = distinct_extract(fact, col)
-        if incoming.isEmpty():  # branch-on-empty (dags/etl.py:53-61)
-            results[col] = {"status": "skipped_empty"}
-            continue
-        dim = sync_dimension(store, f"dim_{col}", incoming, company_id)
-        checks = run_checks(dim, dimension_suite())
-        sync_ok = (
-            validate_sync(incoming, dim, ["name"]).agg(F.sum("missing_count")).collect()[0][0] == 0
+    incoming = {col: distinct_extract(fact, col) for col in dim_columns}
+    # branch-on-empty (dags/etl.py:53-61)
+    synced = [col for col in dim_columns if not incoming[col].isEmpty()]
+    models = [
+        Model(
+            f"dim_{col}",
+            lambda d, col=col: sync_dimension(store, f"dim_{col}", incoming[col], company_id),
+            checks=dimension_suite(),
         )
-        results[col] = {"status": "synced", "checks": checks, "in_sync": bool(sync_ok)}
-        dims[col] = dim
-
-    bridge = rebuild_relations(fact, dims, keep_cols=bridge_keep_cols or [])
-    store.write("media_relations", bridge.withColumn("company_id", F.lit(company_id)))
-    results["bridge_rows"] = store.read("media_relations").count()
-
-    ok = all(
-        (isinstance(r, dict) and r.get("status") == "skipped_empty")
-        or (isinstance(r, dict) and r.get("in_sync") and all(c["ok"] for c in r["checks"]))
-        for k, r in results.items()
-        if k != "bridge_rows"
+        for col in synced
+    ]
+    models.append(
+        Model(
+            "media_relations",
+            lambda d: rebuild_relations(
+                d["fact"],
+                {col: d[f"dim_{col}"] for col in synced},
+                keep_cols=bridge_keep_cols or [],
+            ).withColumn("company_id", F.lit(company_id)),
+            ["fact", *[f"dim_{col}" for col in synced]],
+        )
     )
-    summary = {"ok": ok, "results": results}
+    out = ModelDAG(models).run({"fact": fact}, store)
+    frames = out["_frames"]
+
+    results: dict = {c: {"status": "skipped_empty"} for c in dim_columns if c not in synced}
+    for col in synced:
+        name = f"dim_{col}"
+        if name in out:
+            missing = validate_sync(incoming[col], frames[name], ["name"]).agg(F.sum("missing_count"))
+            in_sync = missing.collect()[0][0] == 0
+            results[col] = {"status": "synced", "checks": out[name]["checks"], "in_sync": in_sync}
+    if "media_relations" in frames:
+        results["bridge_rows"] = frames["media_relations"].count()
+    all_in_sync = all(r.get("in_sync", True) for r in results.values() if isinstance(r, dict))
+    summary = {"ok": "_failed" not in out and all_in_sync, "results": results}
     if callbacks is not None:
         callbacks.report("etl_pipeline", summary)
     return summary

@@ -4,19 +4,22 @@ production with rollback-on-failure (M5 + M6,
 dags/taico/meta/taico_facebook_data_etl_dag.py:40-234).
 
 The Airbyte connector is out-of-engine; the fixture adapter stands in for
-its output (SURVEY.md §2.1 S14). Promotion uses the versioned TableStore:
+its output (SURVEY.md §2.1 S14). The transform and the staging merge are
+ModelDAG models: each is written to the versioned TableStore once and the
+transformed suite checks the written table. Promotion uses the same store:
 the old production version IS the backup; rollback repoints (Delta RESTORE
 analog).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from ..checks.engine import Check, run_checks, schema_check
 from ..checks.suites import MIN_ROWS
 from ..ops.facebook import ads_insights_from_fixtures, campaigns_from_fixtures, fb_ads_transform
 from ..ops.incremental import TableStore, merge_upsert
+from .model_dag import Model, ModelDAG
 
 RAW_REQUIRED_COLS = {
     "ad_id",
@@ -52,32 +55,37 @@ def run_facebook_pipeline(spark: SparkSession, sf_dir: str, store_root: str) -> 
 
     # 1. extract (connector stand-in)
     ads = ads_insights_from_fixtures(spark, sf_dir)
-    camp = campaigns_from_fixtures(spark, sf_dir)
 
     # 2. validate raw: schema presence (validate_extracted_data.py:17-37)
     raw_schema = schema_check(ads, RAW_REQUIRED_COLS)
     if not raw_schema["ok"]:
         return {"ok": False, "stage": "validate_raw", "detail": raw_schema}
 
-    # 3. transform (dbt model restated)
-    transformed = fb_ads_transform(ads, camp)
+    # 3. transform (dbt model restated), validated over its written table
+    #    (validate_extracted_data.py:39-100); 4. incremental staging merge
+    #    (M5: unique_key semantics) over the staging version read here
+    prev = store.read("fb_staging") if store.exists("fb_staging") else None
 
-    # 4. validate transformed (validate_extracted_data.py:39-100)
-    checks = run_checks(transformed, TRANSFORMED_SUITE)
-    if not all(c["ok"] for c in checks):
+    def stage(d):
+        new = d["fb_transformed"]
+        return new if prev is None else merge_upsert(prev, new, ["id", "date", "campaign"])
+
+    transform = Model(
+        "fb_transformed",
+        lambda d: fb_ads_transform(d["ads"], d["campaigns"]),
+        ["ads", "campaigns"],
+        TRANSFORMED_SUITE,
+    )
+    dag = ModelDAG([transform, Model("fb_staging", stage, ["fb_transformed"])])
+    out = dag.run({"ads": ads, "campaigns": campaigns_from_fixtures(spark, sf_dir)}, store)
+    checks = out["fb_transformed"]["checks"]
+    if "_failed" in out:
         return {"ok": False, "stage": "validate_transformed", "detail": checks}
 
-    # 5. incremental staging merge (M5: unique_key semantics)
-    if store.exists("fb_staging"):
-        staged = merge_upsert(store.read("fb_staging"), transformed, ["id", "date", "campaign"])
-    else:
-        staged = transformed
-    store.write("fb_staging", staged)
-
-    # 6. promote with validation + rollback (M6)
-    def _validate_prod(df: DataFrame) -> bool:
-        res = run_checks(df, TRANSFORMED_SUITE)
-        return all(c["ok"] for c in res)
-
-    promoted = store.promote_with_validation("fb_production", store.read("fb_staging"), _validate_prod)
+    # 5. promote with validation + rollback (M6)
+    promoted = store.promote_with_validation(
+        "fb_production",
+        out["_frames"]["fb_staging"],
+        lambda df: all(c["ok"] for c in run_checks(df, TRANSFORMED_SUITE)),
+    )
     return {"ok": promoted, "stage": "done" if promoted else "promote_rollback", "checks": checks}

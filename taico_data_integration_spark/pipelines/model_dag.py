@@ -1,17 +1,16 @@
-"""Model-DAG runner — the engine's dbt analog.
+"""Model-DAG runner — the engine's dbt analog and the one way a pipeline
+runs its models.
 
 The reference's transformation layer is dbt models with ref()/source()
-dependencies, run in groups with checks after each stage
-(include/dbt/models/**, dags/retail.py:58-78). Here a model is a function
-from named input DataFrames to one output DataFrame, declared with its
-dependencies and an optional check suite; the runner topologically orders
-models, executes each once, runs its checks (single-pass aggregates), and
-optionally persists through the versioned TableStore.
-
-Execution stays lazy where possible: a model's output DataFrame is handed
-to downstream models directly (one Catalyst plan across models) unless the
-model is marked `materialize=True` (staging-table semantics — also what you
-want when several consumers would recompute an expensive subplan).
+dependencies, each landing in a table that Soda/dbt tests then check; a
+failing check stops the downstream tasks (include/dbt/models/**,
+dags/retail.py:58-78). Here a model is a function from named input
+DataFrames to one output DataFrame, declared with its dependencies and an
+optional check suite. The runner orders the models topologically and, for
+each one: builds its frame, writes it to the versioned store, runs its
+suite in one aggregate pass over the WRITTEN version, hands that version
+downstream, and stops at the first failing suite. Each model's lineage so
+executes once (the write); checks and consumers scan the stored table.
 """
 
 from __future__ import annotations
@@ -32,7 +31,6 @@ class Model:
     fn: Callable[[dict[str, DataFrame]], DataFrame]
     deps: list[str] = field(default_factory=list)
     checks: list[Check] = field(default_factory=list)
-    materialize: bool = False
 
 
 class ModelDAG:
@@ -49,35 +47,26 @@ class ModelDAG:
                 raise ValueError(f"model {m.name}: unknown deps {unknown}")
             ts.add(m.name, *[d for d in m.deps if d in self.models])
         try:
-            return [n for n in ts.static_order()]
+            return list(ts.static_order())
         except CycleError as e:
             raise ValueError(f"model cycle: {e.args[1]}") from e
 
-    def run(
-        self,
-        sources: dict[str, DataFrame],
-        store: TableFormat | None = None,
-        fail_fast: bool = True,
-    ) -> dict:
-        """Execute all models; returns {model: {'ok', 'checks'}} plus the
-        final frames under '_frames'."""
+    def run(self, sources: dict[str, DataFrame], store: TableFormat) -> dict:
+        """Write, then check, every model; returns {model: {'ok', 'checks'}}
+        for the models that ran, the frames (sources and written versions)
+        under '_frames' and, after a failing suite, its model under
+        '_failed'. A failing model's version stays written; its downstream
+        models do not run."""
         frames: dict[str, DataFrame] = dict(sources)
-        results: dict[str, dict] = {}
+        results: dict = {"_frames": frames}
         for name in self.execution_order(set(sources)):
             m = self.models[name]
-            df = m.fn({d: frames[d] for d in m.deps})
-            if m.materialize and store is not None:
-                store.write(name, df)
-                df = store.read(name)
-            elif m.materialize:
-                df = df.localCheckpoint()
-            frames[name] = df
-            check_results = run_checks(df, m.checks) if m.checks else []
-            ok = all(c["ok"] for c in check_results)
-            results[name] = {"ok": ok, "checks": check_results}
-            if fail_fast and not ok:
-                results["_frames"] = frames
+            store.write(name, m.fn({d: frames[d] for d in m.deps}))
+            frames[name] = store.read(name)
+            checks = run_checks(frames[name], m.checks) if m.checks else []
+            ok = all(c["ok"] for c in checks)
+            results[name] = {"ok": ok, "checks": checks}
+            if not ok:
                 results["_failed"] = name
-                return results
-        results["_frames"] = frames
+                break
         return results

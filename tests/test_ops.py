@@ -3629,6 +3629,30 @@ def test_vacuum_reference_counting_and_tombstones(spark, tmp_path):
     assert store.read("t").count() == n2
 
 
+def test_vacuum_tombstone_drops_checksum_siblings(spark, tmp_path):
+    """A tombstone keeps only what survivors reference: the hidden
+    ``.<part>.crc`` checksum of every deleted part file goes with it, so
+    the tombstone dir holds no checksum without its parquet file."""
+    import os as _os
+
+    from taico_data_integration_spark.ops.incremental import TableStore
+
+    store = TableStore(spark, str(tmp_path))
+    df = spark.range(0, 8_000).selectExpr("id AS k", "CAST(id AS DOUBLE) AS v")
+    store.write("t", df.repartition(2))
+    store.optimize_layout("t", ["k"], num_files=4)  # v1: 4 files
+    v1 = store._read_meta("t")["current"]
+    store.delete_in("t", "k", [3])  # v2: 3 refs into v1 + 1 rewrite
+    store.vacuum("t", keep_latest=1)
+    d1 = _os.path.join(str(tmp_path), "t", f"v{v1:04d}")
+    assert _os.path.exists(_os.path.join(d1, "_VACUUMED"))
+    names = {f for _dp, _dirs, fs in _os.walk(d1) for f in fs}
+    parts = {f for f in names if f.endswith(".parquet") and not f.startswith(".")}
+    crcs = {f for f in names if f.endswith(".parquet.crc")}
+    assert len(parts) == 3
+    assert {c[1:-4] for c in crcs} <= parts
+
+
 def test_cow_reference_chains_stay_depth_one(spark, tmp_path):
     """References always point at the PHYSICAL holder: stacking many COW
     mutations never builds ref->ref chains — every manifest entry's

@@ -382,3 +382,97 @@ def test_ingestion_embedding_stage_guards(spark, tmp_path):
     # near-duplicates into the corpus permanently)
     with _pt.raises(ValueError, match="embedding_colx"):
         ingest_batch(spark, store, sb, embedding_col="embedding_colx")
+
+
+RETAIL_MODELS = ("raw_invoices", "dim_customer", "dim_product", "dim_datetime", "fct_invoices")
+RETAIL_REPORTS = ("report_customer_invoices", "report_product_invoices", "report_year_invoices")
+# One retail run on the sf0.001 fixtures takes 43 Spark jobs on a warm
+# session (49 cold) now that every model is written once and checked over
+# its written table; checking each lineage, writing it again and re-running
+# the fact and dim lineages for the reports took 84 (90 cold).
+RETAIL_MAX_JOBS = 60
+
+
+def _metrics(checks: list[dict]) -> dict:
+    return {c["name"]: c["metric"] for c in checks}
+
+
+def test_pipeline_check_metrics_and_retail_jobs_pinned(spark, tmp_path):
+    """Check metrics, verdicts and stages of retail, facebook x2 and etl x2
+    on the fixtures, pinned at the figures of the pipelines that checked each
+    lineage before writing it: checking the written tables changes none.
+    The retail run's Spark job count is pinned below that of the old flow."""
+    root = str(tmp_path)
+    sc = spark.sparkContext
+    sc.setJobGroup("retail-pin", "retail job count")
+    try:
+        retail = run_retail_pipeline(spark, SF_DIR, f"{root}/retail")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert retail["ok"] is True
+    assert {m: _metrics(c) for m, c in retail["checks"].items()} == {
+        "raw_invoices": {"raw_min_rows": 6000, "raw_invoiceno_not_null": 0},
+        "dim_product": {"product_id_not_null": 0, "product_id_unique": 0, "price_positive": 0},
+        "dim_datetime": {
+            "datetime_id_not_null": 0,
+            "datetime_id_unique": 0,
+            "weekday_range": 0,
+            "month_range": 0,
+        },
+        "fct_invoices": {"invoice_id_not_null": 0, "quantity_positive": 0, "total_positive": 0},
+    }
+    jobs = sc.statusTracker().getJobIdsForGroup("retail-pin")
+    assert 0 < len(jobs) <= RETAIL_MAX_JOBS, len(jobs)
+
+    for _ in range(2):  # first run, then the incremental merge
+        fb = run_facebook_pipeline(spark, SF_DIR, f"{root}/fb")
+        assert (fb["ok"], fb["stage"]) == (True, "done")
+        assert _metrics(fb["checks"]) == {
+            "transformed_min_rows": 1000,
+            "transformed_id_unique": 0,
+            "transformed_date_not_null": 0,
+            "clicks_non_negative": 0,
+            "media_cluster_domain": 0,
+        }
+
+    o = load_table(spark, SF_DIR, "orders")
+    fact = o.select(
+        F.col("o_orderstatus").alias("status"), F.col("o_orderpriority").alias("priority")
+    )
+    dim_metrics = {
+        "dim_name_not_null": 0,
+        "dim_company_not_null": 0,
+        "dim_name_company_unique": 0,
+        "dim_id_unique": 0,
+    }
+    for f, bridge_rows in ((fact, 15), (fact.where(F.col("status") != "P"), 10)):
+        out = run_etl_pipeline(spark, f, ["status", "priority"], f"{root}/etl")
+        assert out["ok"] is True
+        assert out["results"]["bridge_rows"] == bridge_rows
+        for col in ("status", "priority"):
+            r = out["results"][col]
+            assert (r["status"], r["in_sync"]) == ("synced", True)
+            assert _metrics(r["checks"]) == dim_metrics
+
+
+def test_retail_failing_suite_stops_downstream(spark, tmp_path, monkeypatch):
+    """A failing suite fails the run and stops its downstream models: the
+    failing model and everything upstream of it are written, the reports
+    that read the fact never are."""
+    from taico_data_integration_spark.checks.engine import Check
+    from taico_data_integration_spark.pipelines import retail_pipeline
+
+    monkeypatch.setattr(
+        retail_pipeline,
+        "retail_fct_suite",
+        lambda: [Check("min_rows", "fct_impossible_rows", {"n": 10**12})],
+    )
+    out = run_retail_pipeline(spark, SF_DIR, str(tmp_path))
+    assert out["ok"] is False
+    assert [c["ok"] for c in out["checks"]["fct_invoices"]] == [False]
+    assert all(c["ok"] for m in ("raw_invoices", "dim_product", "dim_datetime")
+               for c in out["checks"][m])
+    store = TableStore(spark, str(tmp_path))
+    assert all(store.exists(t) for t in RETAIL_MODELS)
+    assert not any(store.exists(t) for t in RETAIL_REPORTS)
